@@ -397,6 +397,11 @@ object StreamingJobs {
         val sig = graft.operators.PipelineOps
           .minhashSignatures(batch.select(col("doc_id"), col("text")), p, r)
           .persist()
+        // build the cache NOW, before any plan reads it: a cache first
+        // built inside a write under AQE races that write's own scans of
+        // it, which makes the per-batch job count follow thread timing
+        // instead of the batch shape
+        sig.count()
         // a store partition may exist from a half-finished attempt of
         // this same batch (foreachBatch is at-least-once): exclude it
         // from the corpus so replays see the pre-batch state
@@ -501,6 +506,7 @@ object StreamingJobs {
           .groupBy(col("doc_id")).agg(min(col("dup_of")).as("dup_of"))
           .persist() // consumed by BOTH writes — don't run the joins twice
         try {
+          dupOf.count() // eager, as sig above: its plan scans sig six times
           // batch_id-partitioned dynamic overwrite makes a replayed batch
           // rewrite ITS OWN partition instead of appending duplicates
           sig.select(col("doc_id"))
