@@ -2,36 +2,48 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Untimed warmup: pay JIT + whole-stage-codegen compilation + parquet
-    // footer reads once, outside the measurements (the first timed query
-    // otherwise absorbs ~5 s of one-off JVM cost). One cheap query per
-    // major input table / plan family.
+  /** Bench's untimed prep, shared with Probe.
+    *
+    * Warm-up: pay JIT + whole-stage-codegen compilation + parquet footer
+    * reads once, outside the measurements (the first timed query
+    * otherwise absorbs ~5 s of one-off JVM cost). One cheap query per
+    * major input table / plan family.
+    *
+    * Payload prep: the m-family's synthesized binary columns
+    * (PNG/WAV/frame-container) materialize here, outside the timed
+    * window, so m2b/m3/m4/m5 measure demux+decode+features — the cost a
+    * real corpus pays at query time — not ImageIO/RIFF *encode* of their
+    * own inputs (which a real corpus stores once, not per query).
+    */
+  def prepare(spark: SparkSession, sfDir: String): Unit = {
     Seq("q1_agg", "g4_degree_agg", "w1_rolling_mean", "t3_token_count",
         "j1_broadcast_inner").foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
       }
     }
-    // Untimed payload prep: the m-family's synthesized binary columns
-    // (PNG/WAV/frame-container) materialize here, outside the timed
-    // window, so m2b/m3/m4/m5 measure demux+decode+features — the cost a
-    // real corpus pays at query time — not ImageIO/RIFF *encode* of
-    // their own inputs (which a real corpus stores once, not per query).
     try graft.operators.PipelineOps.prepareMultimodalPayloads(spark, sfDir)
     catch { case e: Throwable => System.err.println(s"bench: payload prep failed: $e") }
+  }
+
+  /** Where the full artifact goes, or why none is written. An explicit
+    * SPARK_GRAFT_BENCH_OUT always wins. The default `bench_out.json` is
+    * written only from sf0.1, the SF captures are taken at, so a smoke
+    * run at another SF cannot overwrite a capture.
+    */
+  def artifactPath(explicit: Option[String], sfDir: String): Either[String, String] =
+    explicit match {
+      case Some(p) => Right(p)
+      case None if Option(java.nio.file.Paths.get(sfDir).getFileName)
+          .exists(_.toString == "sf0.1") => Right("bench_out.json")
+      case None => Left(s"bench: not writing bench_out.json from $sfDir " +
+        "(only sf0.1 captures write it); set SPARK_GRAFT_BENCH_OUT to keep this run's artifact")
+    }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Harness.session(32)
+    prepare(spark, sfDir)
 
     // deterministic execution order: comparable timings across rounds.
     // Each query runs REPS times and we report the per-query MIN: this box
@@ -193,7 +205,7 @@ object Bench {
     // Locale.ROOT: a comma-decimal JVM locale would break the JSON.
     Raw.stdout.println(line(results.filter(r => headline(r._1)), fmt3))
     // full precision, all queries + all raw runs persisted for the judge
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val outPath = artifactPath(sys.env.get("SPARK_GRAFT_BENCH_OUT"), sfDir)
     // NaN (failed rep) serializes as JSON null — bare NaN is invalid JSON
     val rawQs = runs.map { case (k, ts) =>
       "\"" + k + "\":" +
@@ -221,21 +233,24 @@ object Bench {
     // half-written artifact, and the write is all-or-nothing even if
     // the JVM dies mid-write (the r14 judge session lost the driver's
     // uncommitted capture to a plain overwrite)
-    try {
-      val target = java.nio.file.Paths.get(outPath).toAbsolutePath
-      val tmp = java.nio.file.Files.createTempFile(
-        target.getParent, ".bench_out", ".tmp")
-      java.nio.file.Files.write(tmp,
-        (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      try java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-        java.nio.file.Files.move(tmp, target,
+    outPath match {
+      case Left(why) => System.err.println(why)
+      case Right(path) => try {
+        val target = java.nio.file.Paths.get(path).toAbsolutePath
+        val tmp = java.nio.file.Files.createTempFile(
+          target.getParent, ".bench_out", ".tmp")
+        java.nio.file.Files.write(tmp,
+          (fileJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        try java.nio.file.Files.move(tmp, target,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
+          java.nio.file.Files.move(tmp, target,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
+      } catch { case e: Throwable =>
+        System.err.println(s"bench: could not write $path: $e")
       }
-    } catch { case e: Throwable =>
-      System.err.println(s"bench: could not write $outPath: $e")
     }
     spark.stop()
   }

@@ -94,11 +94,11 @@ object CorpusRehearsal {
   }
 
   /** The deterministic text → 32-dim integer embedding rule — ONE
-    * definition shared by the materialize stage here, SemDedupAudit and
+    * definition shared by the materialize stage here and
     * ScalingSlopes (the cdcChunks/gramDigests one-definition
     * discipline): the scaling harness's validity claim is that its
     * corpora are shaped like the rehearsal's, which only holds while
-    * all three derive vectors by the same rule. Input needs (doc_id,
+    * both derive vectors by the same rule. Input needs (doc_id,
     * text); output is (vec_id, q) with q = 32 token-hash aggregate
     * coordinates in [-1000·|toks|, 1000·|toks|].
     */
@@ -128,53 +128,25 @@ object CorpusRehearsal {
     graft.functions.GraftExtensions.registerInto(spark)
     val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val stats = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    // SPARK_GRAFT_REHEARSAL_DIAG=1: x12diag's stage-grain listener under
-    // every rehearsal stage — top Spark stages by wall-clock with shuffle
-    // and spill bytes, printed per stage. Diagnostic only (the r13
-    // retrieval-triple investigation); settles the async listener bus
-    // before reading, clears after, same caveats as ScalingSlopes.x12Diag.
+    // SPARK_GRAFT_REHEARSAL_DIAG=1: the top Spark stages of every
+    // rehearsal stage by wall-clock, with shuffle and spill bytes
+    // (Probe.withStages). Diagnostic only; the recorded stage timings
+    // exclude the listener's settling wait.
     val diag = sys.env.get("SPARK_GRAFT_REHEARSAL_DIAG").contains("1")
-    final case class StInfo(id: Int, name: String, ms: Long, shufR: Long,
-      shufW: Long, spillDisk: Long)
-    val diagStages = new java.util.concurrent.ConcurrentLinkedQueue[StInfo]()
-    if (diag) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val m = i.taskMetrics
-          val ms = (for { s <- i.submissionTime; c <- i.completionTime }
-            yield c - s).getOrElse(0L)
-          diagStages.add(StInfo(i.stageId, i.name.takeWhile(_ != '\n').take(80),
-            ms, m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled))
-          (): Unit
-        }
-      })
-    def settleDiag(): Unit = {
-      var prev = -1; var stable = 0; var waited = 0
-      while (stable < 2 && waited < 2000) {
-        Thread.sleep(100); waited += 100
-        val n = diagStages.size()
-        if (n == prev) stable += 1 else { stable = 0; prev = n }
-      }
-    }
     def stage[A](name: String)(body: => A): A = {
-      if (diag) { settleDiag(); diagStages.clear() }
-      val t0 = System.nanoTime()
-      val r = body
-      timings += name -> (System.nanoTime() - t0) / 1e9
-      if (diag) {
-        settleDiag()
-        import scala.jdk.CollectionConverters._
-        Raw.stdout.println(f"== diag $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        diagStages.asScala.toSeq.sortBy(-_.ms).take(8).foreach { st =>
-          Raw.stdout.println(f"   stage ${st.id}%5d ${st.ms / 1000.0}%7.1fs " +
-            f"shufR=${st.shufR / 1e9}%6.2fG shufW=${st.shufW / 1e9}%6.2fG " +
-            f"spillD=${st.spillDisk / 1e9}%6.2fG ${st.name}")
-        }
+      def timed(): A = {
+        val t0 = System.nanoTime()
+        val r = body
+        timings += name -> (System.nanoTime() - t0) / 1e9
+        r
       }
-      r
+      if (!diag) timed()
+      else {
+        val (r, stages) = Probe.withStages(spark)(timed())
+        Raw.stdout.println(f"== diag $name: ${timings.last._2}%.1f s")
+        Probe.stageTable(stages, 8).foreach(Raw.stdout.println)
+        r
+      }
     }
     def put(k: String, v: Long): Unit = stats += k -> v.toString
     // the benchmark suite never contains the boilerplate clone block
@@ -184,7 +156,7 @@ object CorpusRehearsal {
     // like the lifecycle rehearsal's etl_materialize. The embedding
     // column is part of the stored corpus too — a real pipeline embeds
     // once at ingest and semantic dedup reads the stored vectors
-    // (SemDedupAudit: at 500k docs the deterministic embedding
+    // (r15 audit: at 500k docs the deterministic embedding
     // derivation is 62 s while the operator's assignment + pair scan is
     // ~10-15 s — timing synthesis inside the stage would measure the
     // generator, the m-family payload lesson again).
@@ -1043,15 +1015,7 @@ object CorpusRehearsal {
     // carry doc 0's text — the boilerplate-page model)
     val hotCopies = args.drop(1).headOption
       .orElse(sys.env.get("SPARK_GRAFT_CORPUS_HOT")).getOrElse("1").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val dir = java.nio.file.Files.createTempDirectory("graft_corpus").toString
     try {
       val (timings, stats) = run(spark, nDocs, dir, hotCopies)

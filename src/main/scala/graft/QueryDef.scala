@@ -111,7 +111,7 @@ object Tables {
     * when the parquet layout offers fewer splittable units (row groups)
     * than the session's cores, everything derived map-side from the
     * scan — gram digests, BM25 sorted-run counting, minhash signatures
-    * — runs on that handful of tasks regardless of cost (StageProbe:
+    * — runs on that handful of tasks regardless of cost (stage probe:
     * d21's 6-gram md5 build, 3.4 s on ONE task; d15/x11's BM25 index
     * cold build, 12–14 s, same single task). A pinned-count hash
     * repartition on the row key spreads the derivation across cores

@@ -284,15 +284,7 @@ object Rehearsal {
     // features — 86 ≈ 10% of the corpus on one strain at 770 strains)
     val hotFactor = args.drop(1).headOption
       .orElse(sys.env.get("SPARK_GRAFT_REHEARSAL_HOT")).getOrElse("1").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     // optional: route the lifecycle's per-strain windows through the Skew
     // two-phase plans (bit-identical output, SkewLifecycleSpec) — lets a
     // hot-factor run exercise the mitigation at matched scale

@@ -25,15 +25,7 @@ import org.apache.spark.sql.functions._
 object ScalingSlopes {
 
   private def d4Stats(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val root = java.nio.file.Files.createTempDirectory("graft_d4stats").toString
     try {
       Seq(1L, 3L).foreach { sc =>
@@ -135,16 +127,7 @@ object ScalingSlopes {
     * twice, before dying).
     */
   private def d4Auto(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     graft.functions.GraftExtensions.registerInto(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_d4auto").toString
     try {
@@ -197,14 +180,7 @@ object ScalingSlopes {
     * branch's design regime).
     */
   private def d4Probe(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val docs = spark.range(150000L)
       .select(col("id").as("doc_id"), (col("id") % 7).as("lb"),
         expr("array_sort(array_distinct(transform(sequence(1, 40), " +
@@ -243,75 +219,24 @@ object ScalingSlopes {
     * wall-clocks (scaling_x12_out.json) can move for environment reasons
     * a single number can't explain — this mode shows WHERE the seconds
     * sit so a regression reads as "stage X spills" instead of a guess.
-    *
-    * Listener caveat: SparkListener events are delivered asynchronously
-    * on the listener bus, so stage-completed events can still be in
-    * flight when the noop write returns. Each rep therefore SETTLES the
-    * bus (polls the captured-stage count until it is stable across two
-    * consecutive polls, bounded at ~2 s) before reading, and clears the
-    * queue only AFTER the read — a late straggler past the settle bound
-    * can at worst be dropped from its own rep's report (it is cleared
-    * before the next rep's timer starts), never misattributed to a
-    * later rep or query.
+    * The stage table comes from [[Probe.withStages]].
     */
   private def x12Diag(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val root = java.nio.file.Files.createTempDirectory("graft_x12diag").toString
-    final case class St(id: Int, name: String, ms: Long, shufR: Long,
-      shufW: Long, spillMem: Long, spillDisk: Long, out: Long)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[St]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val m = i.taskMetrics
-        val ms = (for {s <- i.submissionTime; c <- i.completionTime}
-          yield c - s).getOrElse(0L)
-        stages.add(St(i.stageId, i.name.takeWhile(_ != '\n').take(80), ms,
-          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-          m.memoryBytesSpilled, m.diskBytesSpilled, m.outputMetrics.bytesWritten))
-        (): Unit
-      }
-    }
     try {
       materialize(spark, 150000L, 60000L, root)
-      spark.sparkContext.addSparkListener(listener)
       Seq("x12_hybrid_retrieval", "x12b_hybrid_pruned", "x12c_hybrid_ivf")
         .foreach { q =>
           (1 to 2).foreach { rep =>
-            val t0 = System.nanoTime()
-            SparkEntry.queries(q)(spark, root)
-              .write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            // settle the async listener bus: events for just-finished
-            // stages may not have been delivered yet (doc comment above)
-            var prev = -1
-            var stable = 0
-            var waited = 0
-            while (stable < 2 && waited < 2000) {
-              Thread.sleep(100); waited += 100
-              val n = stages.size()
-              if (n == prev) stable += 1 else { stable = 0; prev = n }
+            val (sec, stages) = Probe.withStages(spark) {
+              val t0 = System.nanoTime()
+              SparkEntry.queries(q)(spark, root)
+                .write.format("noop").mode("overwrite").save()
+              (System.nanoTime() - t0) / 1e9
             }
             Raw.stdout.println(f"== $q rep$rep: $sec%.1f s")
-            import scala.jdk.CollectionConverters._
-            stages.asScala.toSeq.sortBy(-_.ms).take(12).foreach { s =>
-              Raw.stdout.println(f"   stage ${s.id}%5d ${s.ms / 1000.0}%7.1fs " +
-                f"shufR=${s.shufR / 1e9}%6.2fG shufW=${s.shufW / 1e9}%6.2fG " +
-                f"spillD=${s.spillDisk / 1e9}%6.2fG ${s.name}")
-            }
-            // clear AFTER reading, BEFORE the next rep's timer: stragglers
-            // from this rep can be lost but never bleed into the next
-            stages.clear()
+            Probe.stageTable(stages, 12).foreach(Raw.stdout.println)
           }
         }
     } finally {
@@ -336,16 +261,8 @@ object ScalingSlopes {
     * isolates the probe/bookkeeping overhead the r11 rework removed.
     */
   private def streamAge(): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "1000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(8)
     val root = java.nio.file.Files.createTempDirectory("graft_streamage").toString
     try {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -449,23 +366,14 @@ object ScalingSlopes {
     require(queries.nonEmpty,
       s"SPARK_GRAFT_SCALING_QUERIES selected none of: ${allQueries.mkString(", ")}")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Harness.session(32,
       // shuffle files are only deleted when their ShuffleDependency is
       // GC'd and the ContextCleaner notices; the default periodic-GC
       // interval (30 min) lets a multi-query 30× crossover accumulate
       // >70 GB of dead shuffle data (the r14 first attempt died on
       // ENOSPC mid-run). One minute keeps disk bounded at roughly one
       // query's live working set without touching any timed plan.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.cleaner.periodicGC.interval" -> "1min")
     // dense-vocabulary corpus: pin the quadratic branch (see scaladoc)
     if (d4CrossoverMode) spark.conf.set("graft.d4.maxExactRows", "10000000")
     val root = java.nio.file.Files.createTempDirectory("graft_scaling").toString

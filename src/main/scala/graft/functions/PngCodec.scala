@@ -26,7 +26,8 @@ import javax.imageio.ImageIO
   * pays every call (that convenience path also scans the registry per
   * invocation). This is the shape a real media pipeline needs at 100 TB:
   * codec setup cost per BATCH, not per row. [[decodeOne]] is the
-  * per-row convenience baseline, kept for the TimeAudit comparison.
+  * per-row convenience baseline: the fallback for non-grayscale frames
+  * and the reference the tests hold the batched path to.
   *
   * On real corpora, swap [[synthesize]] for the stored binary column;
   * everything downstream of the `(id, bytes)` pair is payload-agnostic.
@@ -285,7 +286,7 @@ object PngCodec {
 
   /** Per-row baseline: the `ImageIO.read` convenience path (fresh reader
     * + registry scan per image). Functionally identical to the batched
-    * path; exists so TimeAudit can measure what batching saves.
+    * path.
     */
   def decodeOne(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
     val img = ImageIO.read(new ByteArrayInputStream(bytes))

@@ -67,62 +67,13 @@ object TopK {
     * deliberately re-set 128 being indistinguishable from untouched —
     * is respected; set any non-default value to opt out).
     *
-    * The clone is CACHED per parent session and reused: cloneSession +
-    * the clone's lazy SessionState materialization cost a measured
-    * ~0.5 s on first use, which a fresh clone per plan build would pay
-    * on every bench rep / repeated query construction (r13 CloneProbe:
-    * d5b build+run 1.16 s with a per-build clone vs 0.59 s on a warm
-    * session). To keep the cached clone semantically equivalent to a
-    * fresh one, every access re-syncs the parent's runtime conf into
-    * the clone (sets diffs, unsets keys the parent dropped, never
-    * touching the raised threshold key) — a conf the user changes on
-    * the parent between builds is still honored by the next build.
+    * The clone is cached per parent session ([[graft.operators.Tuning.scoped]]),
+    * and every access re-syncs the parent's runtime conf into it.
     */
   def sessionWithHashAggCapacity(spark: SparkSession): SparkSession =
     if (spark.conf.get(FallbackConfKey, SparkDefault) != SparkDefault) spark
-    else scopedSessions.synchronized {
-      // evict clones of stopped parents first: the clone's SessionState
-      // strongly reaches its parent (cloneSession keeps the parent
-      // state's builder closures), so the WeakHashMap KEY never becomes
-      // weakly reachable while its value lives — without this sweep a
-      // process cycling getOrCreate/stop (test JVMs) accumulates one
-      // dead (parent, clone) pair per cycle for the JVM lifetime. The
-      // clone shares the parent's SparkContext, so parent-stopped ⇒
-      // context-stopped ⇒ the cached clone is unusable anyway.
-      scopedSessions.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-      val scoped = Option(scopedSessions.get(spark)).getOrElse {
-        val c = org.apache.spark.sql.GraftSqlShim.cloneSession(spark)
-        scopedSessions.put(spark, c)
-        c
-      }
-      syncConf(spark, scoped)
-      scoped.conf.set(FallbackConfKey, RaisedFallbackThreshold.toString)
-      scoped
-    }
-
-  // WeakHashMap + the stopped-parent sweep above: the few long-lived
-  // sessions a process holds (Verify/Bench: one) cache one clone each,
-  // and stopped parents are evicted on the next access. Guarded by its
-  // own lock — SparkSession access is cheap, creation rare.
-  private val scopedSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
-
-  /** Make the cached clone's runtime conf mirror the parent's (except the
-    * raised threshold key): set entries that differ, unset entries the
-    * parent no longer carries. Static confs throw on set — skipped; they
-    * cannot diverge between sessions sharing one SparkContext anyway.
-    */
-  private def syncConf(parent: SparkSession, scoped: SparkSession): Unit = {
-    val p = parent.conf.getAll
-    val s = scoped.conf.getAll
-    p.foreach { case (k, v) =>
-      if (k != FallbackConfKey && !s.get(k).contains(v))
-        try scoped.conf.set(k, v) catch { case _: Exception => () }
-    }
-    (s.keySet -- p.keySet - FallbackConfKey).foreach { k =>
-      try scoped.conf.unset(k) catch { case _: Exception => () }
-    }
-  }
+    else graft.operators.Tuning.scoped(
+      spark, FallbackConfKey, RaisedFallbackThreshold.toString)
 
   /** Session-WIDE variant of [[sessionWithHashAggCapacity]]: raises the
     * given session's fallback threshold in place. This is the documented

@@ -1027,7 +1027,7 @@ object PipelineOps {
     */
   // whitespace-collapse WITHOUT the regex engine: split/filter/array_join
   // stays in whole-stage codegen and measured 5x faster than
-  // regexp_replace(' +') at sf0.1, byte-identical output (TimeAudit)
+  // regexp_replace(' +') at sf0.1, byte-identical output (r7 timing audit)
   // private[graft]: the ScalingSlopes d4auto diagnostic reconstructs d4's
   // exact token derivation to report the router's probe numbers
   private[graft] val normSql = "array_join(filter(split(trim(lower(text)), ' '), x -> x != ''), ' ')"
@@ -1672,7 +1672,7 @@ object PipelineOps {
           // trigram column behind its own exchange (measured ~35% off the
           // whole query at sf0.1)
           .repartition(col("lang"), col("lb"))
-        // Size dispatch, tuned from the r7 TimeAudit crossover sweep
+        // Size dispatch, tuned from the r7 timing-audit crossover sweep
         // (1/2/4/8x corpora, 5k -> 40k docs, length-preserving replicas
         // so block SIZES grow with N — the regime that kills the
         // quadratic): quadratic 0.57/1.46/3.86/17.1 s vs PrefixJoin
@@ -3953,7 +3953,7 @@ object PipelineOps {
         val tot = vocab.agg(sum(col("cnt")).as("t_total"))
         // SharedFrame: the per-doc frame feeds BOTH the threshold
         // derivation and the final band assignment — without it the plan
-        // runs the corpus token shuffle twice (caught by ExplainAudit:
+        // runs the corpus token shuffle twice (caught by a plan audit:
         // two full Scan→explode→join→agg subtrees in the physical plan)
         val per = SharedFrame(
           toks.join(vocab, Seq("tok"))

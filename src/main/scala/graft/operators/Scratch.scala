@@ -93,7 +93,7 @@ object Scratch {
   * several shared frames, so in persist mode every consumer carries the
   * full upstream LINEAGE — the analyzed tree of x6b's warm rep rendered
   * 860 InMemoryTableScan nodes, and ~1.3 s/rep went to driver-side
-  * analysis + cache-lookup canonicalization of that tree (StageProbe,
+  * analysis + cache-lookup canonicalization of that tree (stage probe,
   * r16). The scratch path truncates the plan to a parquet leaf at every
   * such boundary, which is the guide's "materialise an intermediate to
   * cut planning time" remedy (§3.3/§7.3) with no CacheManager identity

@@ -1,17 +1,14 @@
 package graft.pangenome
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
+import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** GraphX fallbacks for the cases where the positional model's linearity
   * assumption breaks (SURVEY §4: plasmids / multiple contigs ⇒ several
-  * chains per strain, or arbitrary neighbour graphs):
-  *
-  *  - bounded BFS (Pregel) = the general form of the Cypher
-  *    `-[:NEIGHBOUR*min..max]->` expansion (G6/G7);
-  *  - connected components = the scalable grouping for similarity graphs
-  *    (C4; the reference slices scipy cluster labels driver-side).
+  * chains per strain, or arbitrary neighbour graphs): connected
+  * components, the scalable grouping for similarity graphs (C4; the
+  * reference slices scipy cluster labels driver-side).
   *
   * The DataFrame positional engine remains the fast path — these exist so
   * the engine is *correct* on inputs the reference never sees.
@@ -56,21 +53,6 @@ object GraphFallback {
       .select(xxhash64(col("src")).as("s"), xxhash64(col("dst")).as("d"))
       .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, 1) }
     (Graph(vertRdd, edgeRdd), vmap)
-  }
-
-  /** Bounded BFS from `sources`: returns (vertex, hop distance) for every
-    * vertex reachable within `maxHops` directed hops. Pregel supersteps =
-    * maxHops — use only when the chain model does not apply.
-    */
-  def boundedBfs(g: Graph[String, Int], sources: Set[VertexId], maxHops: Int): Graph[Int, Int] = {
-    val init = g.mapVertices((id, _) => if (sources.contains(id)) 0 else Int.MaxValue)
-    init.pregel(Int.MaxValue, maxIterations = maxHops)(
-      (_, dist, msg) => math.min(dist, msg),
-      triplet =>
-        if (triplet.srcAttr != Int.MaxValue && triplet.srcAttr + 1 < triplet.dstAttr)
-          Iterator((triplet.dstId, triplet.srcAttr + 1))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
   }
 
   /** Connected components over an undirected similarity edge set

@@ -2,7 +2,6 @@ package graft
 
 import graft.pangenome.GraphFallback
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,22 +14,6 @@ class GraphFallbackSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
-
-  test("bounded BFS respects hop limit on a chain") {
-    import spark.implicits._
-    // chain a->b->c->d->e
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"))
-      .toDF("src", "dst")
-    val (g, vmap) = GraphFallback.buildGraph(spark, edges)
-    val aId = vmap.filter(col("name") === "a").head().getLong(1)
-    val bfs = GraphFallback.boundedBfs(g, Set(aId), maxHops = 2)
-    val dists = bfs.vertices.toDF("vid", "dist")
-      .join(vmap, "vid")
-      .collect().map(r => r.getAs[String]("name") -> r.getAs[Int]("dist")).toMap
-    assert(dists("a") == 0 && dists("b") == 1 && dists("c") == 2)
-    // beyond the bound: unreached
-    assert(dists("d") == Int.MaxValue && dists("e") == Int.MaxValue)
-  }
 
   test("connected components group similarity pairs") {
     import spark.implicits._

@@ -1,0 +1,81 @@
+package graft
+
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The entry points' shared pieces: `Harness.session` is the only session
+  * builder in the main sources and carries the shared posture, `Probe`
+  * parses its flags and reports timings plus plan counts, and Bench's
+  * smoke-run guard keeps a non-sf0.1 run from writing the default
+  * artifact.
+  */
+class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val defaultCpus = 2
+  private lazy val spark = Harness.session(defaultCpus)
+
+  override def afterAll(): Unit = spark.stop()
+
+  test("Harness.session carries the shared confs") {
+    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    assert(spark.sparkContext.master == s"local[$n]")
+    val c = spark.conf
+    assert(c.get("spark.sql.shuffle.partitions") == n)
+    assert(c.get("spark.sql.session.timeZone") == "UTC")
+    assert(c.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(c.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+  }
+
+  test("SparkSession.builder appears in the main sources only in Harness.scala") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val builders = files(root).filter(_.getName.endsWith(".scala")).filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.mkString.contains("SparkSession.builder") finally src.close()
+    }
+    assert(builders.map(_.getName) == Seq("Harness.scala"),
+      s"session builders outside Harness: ${builders.mkString(", ")}")
+  }
+
+  test("Probe parses its flags and rejects unknown ones") {
+    val o = Probe.parse(List("--reps", "3", "--stages", "--conf", "a.b=c=d",
+      "--explain", "q1_agg", "j8_star_join"))
+    assert(o == Probe.Opts(reps = 3, stages = true, explain = true,
+      confs = Seq("a.b" -> "c=d"), queries = Seq("q1_agg", "j8_star_join")))
+    assert(Probe.parse(Nil) == Probe.Opts())
+    Seq(List("--reps", "0"), List("--reps"), List("--conf", "novalue"),
+        List("--bogus")).foreach { bad =>
+      intercept[IllegalArgumentException](Probe.parse(bad))
+    }
+  }
+
+  test("Probe prints a timing line with plan counts for one query at sf0.001") {
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    Probe.run(spark, "/root/testdata/sf0.001",
+      Probe.Opts(reps = 1, stages = true, queries = Seq("j8_star_join")), lines += _)
+    val rep = lines.filter(_.startsWith("[rep]"))
+    assert(rep.size == 1, lines.mkString("\n"))
+    assert(("""\[rep\] j8_star_join\s+rep=1 build=[\d.]+ s plan=[\d.]+ s """ +
+      """exec=[\d.]+ s InMemoryTableScan=\d+ Exchange=[1-9]\d*""").r.matches(rep.head),
+      rep.head)
+    assert(lines.exists(_.trim.startsWith("stage ")),
+      s"--stages printed no stage table:\n${lines.mkString("\n")}")
+  }
+
+  test("Bench writes the default artifact only from sf0.1") {
+    assert(Bench.artifactPath(None, "/root/testdata/sf0.1") == Right("bench_out.json"))
+    assert(Bench.artifactPath(None, "/root/testdata/sf0.1/") == Right("bench_out.json"))
+    assert(Bench.artifactPath(Some("/tmp/x.json"), "/root/testdata/sf0.001") ==
+      Right("/tmp/x.json"))
+    assert(Bench.artifactPath(Some("out.json"), "/root/testdata/sf0.1") ==
+      Right("out.json"))
+    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/data/sf0.10", "/").foreach { d =>
+      val r = Bench.artifactPath(None, d)
+      assert(r.isLeft, s"$d: $r")
+      assert(r.left.exists(_.contains("SPARK_GRAFT_BENCH_OUT")))
+    }
+  }
+}

@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scale contract, pinned at the plan level for EVERY driver-contract
-  * query (ground truth gathered by `graft.PlanScan`):
+  * query (ground truth: `graft.Probe` run with no query named):
   *
   *  - no CartesianProduct, anywhere, ever;
   *  - BroadcastNestedLoopJoin only where the operator is a deliberate
