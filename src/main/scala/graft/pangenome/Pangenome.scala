@@ -5,6 +5,7 @@ import graft.sources.PirateSources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 /** The domain pipeline: PIRATE output -> node/edge tables -> enrichment ->
   * analyses, reproducing the reference end to end (SURVEY §3 lifecycle
@@ -24,6 +25,12 @@ import org.apache.spark.sql.expressions.Window
   * 18 over materialized tables — genomeTrack 605 vs 4). This mirrors the
   * reference, where the Neo4j store is the boundary between build and
   * query (SURVEY §3).
+  *
+  * Inside the build, [[buildGraph]] derives the feature->cluster
+  * membership once — one left join of the features to the exploded
+  * member lists — and caches it before it returns; all eight tables read
+  * that frame instead of re-deriving the explode. [[Schemas.writeGraph]]
+  * releases the cache once it has stored the last table.
   */
 object Pangenome {
 
@@ -131,25 +138,48 @@ object Pangenome {
       clusterNeighbours: DataFrame, // c1, c2, number_of_members, members
       featureNeighbours: DataFrame, // src, dst, strain
       featureInStrain: DataFrame, // feature_id -> strain
-      clusterInStrain: DataFrame) // cluster_id -> strain (deduped 2-hop)
+      clusterInStrain: DataFrame, // cluster_id -> strain (deduped 2-hop)
+      // the build's cached feature->cluster membership, which the tables
+      // above read; [[Schemas.writeGraph]] releases it after the last table
+      membership: Option[DataFrame] = None)
 
+  /** Builds the eight graph tables from ONE feature->cluster membership
+    * frame. The features are left-joined to the exploded member lists:
+    * matched rows are the ORTHOLOG edges, null-extended rows are exactly
+    * the lonely features. The frame is persisted (`MEMORY_AND_DISK`) and
+    * built here, before any table is written — a cache first built inside
+    * a write under AQE races that write's own scans of it. It stays cached
+    * until [[Schemas.writeGraph]] has stored the last table; a caller that
+    * never writes the graph unpersists `membership` itself.
+    */
   def buildGraph(spark: SparkSession, t: EtlTables): GraphTables = {
     val features0 = t.features
-    // J7: UNWIND feature ids (P4 split+filter) ⋈ features
-    val clustered = t.clusters
-      .select(col("allele_name").as("cluster_id"),
+    // J7+J12: UNWIND member ids (P4 split+filter) and left-join them onto
+    // the features (01_creatingDatabase.cypher:70-89). A feature named in
+    // two member lists gets two rows; a member id with no feature drops.
+    // Only the columns the tables below read are kept.
+    val members = t.clusters
+      .select(col("allele_name").as("member_of"),
         explode(filter(split(col("feature"), ";"), x => x =!= "0" && x =!= ""))
-          .as("feature_id"))
-    val ortholog0 = clustered.join(
-      features0.select(col("Name").as("feature_id")), Seq("feature_id"))
+          .as("member"))
+    val membership = features0
+      .select(col("Name"), col("Strain"), col("FeatureType"), col("Product"),
+        col("Length"), col("FullSequences"))
+      .join(members, col("Name") === col("member"), "left")
+      .select(col("Name"), col("Strain"), col("FeatureType"), col("Product"),
+        col("Length"), col("FullSequences"),
+        // a lonely feature is its own single-member cluster
+        when(col("member").isNull, col("Name")).otherwise(col("member_of"))
+          .as("cluster_id"),
+        col("member").isNull.as("lonely"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    membership.count()
 
-    // J12: lonely features -> their own single-member clusters
-    // (01_creatingDatabase.cypher:70-89); feature.full_sequence moves onto
-    // the lonely cluster's reference_sequence and is nulled on the feature
-    val lonely = features0.join(ortholog0.select(col("feature_id")),
-        col("Name") === col("feature_id"), "left_anti")
-    // Lonely clusters carry the single member as scalar CDS_ids (not a
-    // feature_ids list) and no reference_locus, 01_creatingDatabase.cypher:83
+    // feature.full_sequence moves onto the lonely cluster's
+    // reference_sequence and is nulled on the feature. Lonely clusters
+    // carry the single member as scalar CDS_ids (not a feature_ids list)
+    // and no reference_locus, 01_creatingDatabase.cypher:83
+    val lonely = membership.filter(col("lonely"))
     val lonelyClusters = lonely.select(
       col("Name").as("cluster_id"), col("Product").as("description"),
       lit(50L).as("threshold"), lit(1L).as("number_genomes"),
@@ -159,8 +189,7 @@ object Pangenome {
       col("Name").as("CDS_ids"),
       col("Name").as("reference_locus"), col("FullSequences").as("reference_sequence"),
       lit(true).as("lonely_cluster"))
-    val ortholog = ortholog0.unionByName(
-      lonely.select(col("Name").as("cluster_id"), col("Name").as("feature_id")))
+    val ortholog = membership.select(col("Name").as("feature_id"), col("cluster_id"))
 
     val features = features0.join(
         lonely.select(col("Name").as("ln")), col("Name") === col("ln"), "left")
@@ -173,9 +202,7 @@ object Pangenome {
     val typePrio = when(col("FeatureType") === "CDS", 3)
       .when(col("FeatureType") === "tRNA", 2)
       .when(col("FeatureType") === "pseudogene", 1).otherwise(0)
-    val clusterType = ortholog
-      .join(features.select(col("Name").as("feature_id"), col("FeatureType")),
-        Seq("feature_id"))
+    val clusterType = membership
       .groupBy(col("cluster_id")).agg(max(typePrio).as("tp"))
       .withColumn("feature_type",
         when(col("tp") === 3, "CDS").when(col("tp") === 2, "tRNA")
@@ -217,14 +244,15 @@ object Pangenome {
       col("sourceFeature").as("src"), col("receivingFeature").as("dst"), col("strain"))
 
     // O6+J9: STRAIN nodes, membership edges, deduped 2-hop cluster⋈strain
-    val strains = features.select(col("Strain").as("name")).distinct()
-    val featureInStrain = features.select(col("Name").as("feature_id"),
+    // (a membership row already carries its feature's strain: no join)
+    val strains = features0.select(col("Strain").as("name")).distinct()
+    val featureInStrain = features0.select(col("Name").as("feature_id"),
       col("Strain").as("strain"))
-    val clusterInStrain = ortholog.join(featureInStrain, Seq("feature_id"))
-      .select(col("cluster_id"), col("strain")).distinct()
+    val clusterInStrain = membership
+      .select(col("cluster_id"), col("Strain").as("strain")).distinct()
 
     GraphTables(features, clusters, strains, ortholog, clusterNeighbours,
-      featureNeighbours, featureInStrain, clusterInStrain)
+      featureNeighbours, featureInStrain, clusterInStrain, Some(membership))
   }
 
   // ------------------------------------------------------------------

@@ -61,22 +61,30 @@ object Schemas {
     * (at 770 strains x 32 tasks, ~25k files per table). After the
     * repartition each task owns whole strains and writes one file per
     * strain — the layout a 1000-executor job needs too.
+    *
+    * ORTHOLOG is stored grouped by cluster: the membership frame it is read
+    * from is in feature order, and runs of one cluster_id compress better
+    * (the benchmark's 8-strain lifecycle: 286 KB, against 333 KB in feature
+    * order). Once the last table is stored, the build's cached membership
+    * frame is released.
     */
-  def writeGraph(g: Pangenome.GraphTables, dir: String): Unit = {
-    g.features.repartition(col("Strain"))
-      .write.mode("overwrite").partitionBy("Strain").parquet(s"$dir/features")
-    g.featureNeighbours.repartition(col("strain"))
-      .write.mode("overwrite").partitionBy("strain")
-      .parquet(s"$dir/feature_neighbours")
-    g.clusters.write.mode("overwrite").parquet(s"$dir/clusters")
-    g.strains.write.mode("overwrite").parquet(s"$dir/strains")
-    g.ortholog.write.mode("overwrite").parquet(s"$dir/ortholog")
-    g.clusterNeighbours.write.mode("overwrite").parquet(s"$dir/cluster_neighbours")
-    g.featureInStrain.repartition(col("strain"))
-      .write.mode("overwrite").partitionBy("strain")
-      .parquet(s"$dir/feature_in_strain")
-    g.clusterInStrain.write.mode("overwrite").parquet(s"$dir/cluster_in_strain")
-  }
+  def writeGraph(g: Pangenome.GraphTables, dir: String): Unit =
+    try {
+      g.features.repartition(col("Strain"))
+        .write.mode("overwrite").partitionBy("Strain").parquet(s"$dir/features")
+      g.featureNeighbours.repartition(col("strain"))
+        .write.mode("overwrite").partitionBy("strain")
+        .parquet(s"$dir/feature_neighbours")
+      g.clusters.write.mode("overwrite").parquet(s"$dir/clusters")
+      g.strains.write.mode("overwrite").parquet(s"$dir/strains")
+      g.ortholog.sortWithinPartitions(col("cluster_id"))
+        .write.mode("overwrite").parquet(s"$dir/ortholog")
+      g.clusterNeighbours.write.mode("overwrite").parquet(s"$dir/cluster_neighbours")
+      g.featureInStrain.repartition(col("strain"))
+        .write.mode("overwrite").partitionBy("strain")
+        .parquet(s"$dir/feature_in_strain")
+      g.clusterInStrain.write.mode("overwrite").parquet(s"$dir/cluster_in_strain")
+    } finally g.membership.foreach(_.unpersist())
 
   def readGraph(spark: SparkSession, dir: String): Pangenome.GraphTables =
     Pangenome.GraphTables(

@@ -201,6 +201,9 @@ object StreamingJobs {
           .shardCardBase(batch.select(col("doc_id"), col("text")))
           .persist() // two grains read it — don't tokenize twice
         try {
+          // build the cache NOW, as incrementalNearDedup does: a cache first
+          // built inside a write under AQE races that write's own scans
+          base.count()
           graft.operators.PipelineOps.shardCardCells(base)
             .withColumn("batch_id", lit(batchId))
             .write.partitionBy("batch_id")
@@ -614,6 +617,10 @@ object StreamingJobs {
           .withColumn("removable", col("seen").isNotNull || col("rn") > 1)
           .persist() // consumed by the span write AND the store write
         try {
+          // eager, as incrementalNearDedup's caches: neither is first
+          // built inside a write
+          grams.count()
+          marked.count()
           graft.operators.PipelineOps.islandSpans(
               marked.filter(col("removable")).select(col("doc_id"), col("pos")), n)
             .filter(col("n_tokens") >= minLen)
@@ -708,6 +715,10 @@ object StreamingJobs {
           .withColumn("is_dup", col("seen").isNotNull || col("rn") > 1)
           .persist() // consumed by BOTH writes — don't rerun the joins
         try {
+          // eager, as incrementalNearDedup's caches: neither is first
+          // built inside a write
+          chunks.count()
+          marked.count()
           // account EVERY batch doc — an empty-text doc has zero chunks
           // (cdcChunks drops it), but its accounting row must still
           // exist or "docs ingested == docs accounted" reconciliation

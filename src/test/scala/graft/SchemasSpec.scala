@@ -1,7 +1,7 @@
 package graft
 
 import graft.pangenome.{Pangenome, Schemas}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{CacheEntries, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +50,25 @@ class SchemasSpec extends AnyFunSuite with BeforeAndAfterAll {
       .queryExecution.executedPlan.toString
     assert(plan.contains("S1"), "partition filter must reach the scan")
     assert(back.features.filter(col("Strain") === "S1").count() == 8)
+  }
+
+  test("the graph tables read one cached membership, released by writeGraph") {
+    val etl = Pangenome.etl(spark, fixture)
+    val cachedBefore = CacheEntries.count(spark)
+    val g = Pangenome.buildGraph(spark, etl)
+    // with cached data substituted, no table re-derives the member explode
+    Seq("features" -> g.features, "clusters" -> g.clusters, "ortholog" -> g.ortholog,
+      "clusterNeighbours" -> g.clusterNeighbours,
+      "clusterInStrain" -> g.clusterInStrain).foreach { case (name, df) =>
+      val generates = df.queryExecution.optimizedPlan.collect {
+        case gen: org.apache.spark.sql.catalyst.plans.logical.Generate => gen
+      }
+      assert(generates.isEmpty, s"$name's plan explodes the member lists again")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_release").toString
+    Schemas.writeGraph(g, dir)
+    assert(CacheEntries.count(spark) <= cachedBefore,
+      "writeGraph left the build's membership cached")
   }
 
   test("analyses over materialized tables equal the lineage path and stay flat") {
