@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   * cell-12 structure (5,078 candidate insertions at full scale).
   *
   * Usage: `sbt "runMain graft.Rehearsal [nStrains]"` (default 770; the
-  * spec runs a miniature). Emits one JSON line with per-stage seconds and
-  * writes rehearsal_out.json.
+  * spec runs a miniature). Emits one JSON line with per-stage wall seconds
+  * (`stages`) and process CPU seconds (`stages_cpu`) and writes
+  * rehearsal_out.json.
   */
 object Rehearsal {
 
@@ -139,20 +140,27 @@ object Rehearsal {
     Pangenome.EtlTables(features, clusters, neighbourEdges)
   }
 
-  /** Run the lifecycle against `dir`; returns (stage -> seconds, rgp rows,
-    * analysis stats). The stats block mirrors BASELINE.md's notebook-golden
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** Run the lifecycle against `dir`; returns ((stage, wall seconds, process
+    * CPU seconds) per stage, rgp rows, analysis stats). Process CPU counts
+    * every thread of the JVM (executors, JIT, collector), so a stage that
+    * reads slower in wall but not in CPU waited on the host, not on the
+    * program. The stats block mirrors BASELINE.md's notebook-golden
     * table (RGPs.ipynb cells 12/25/35/38/54/67/89-91) so each round's
     * rehearsal reports the same cardinalities the reference recorded at
     * full scale — in ratio form against the synthetic shape, since the
     * real 770-genome dataset is not in the sandbox.
     */
   def run(spark: SparkSession, nStrains: Int, dir: String, hotFactor: Int = 1)
-      : (Seq[(String, Double)], Long, Seq[(String, String)]) = {
-    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+      : (Seq[(String, Double, Double)], Long, Seq[(String, String)]) = {
+    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
     def stage[A](name: String)(body: => A): A = {
       val t0 = System.nanoTime()
+      val c0 = osBean.getProcessCpuTime
       val r = body
-      timings += name -> (System.nanoTime() - t0) / 1e9
+      timings += ((name, (System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9))
       r
     }
 
@@ -297,12 +305,20 @@ object Rehearsal {
       val (timings, nRgps, stats) = run(spark, nStrains, dir, hotFactor)
       val total = timings.map(_._2).sum
       def f(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-      val stages = timings.map { case (k, v) => s""""$k":${f(v)}""" }.mkString(",")
+      val stages = timings.map { case (k, v, _) => s""""$k":${f(v)}""" }.mkString(",")
+      val stagesCpu = timings.map { case (k, _, c) => s""""$k":${f(c)}""" }.mkString(",")
       // stats values are numeric strings built with Locale.ROOT — emit bare
       val analysis = stats.map { case (k, v) => s""""$k":$v""" }.mkString(",")
+      // the stored graph's footprint: directories (its root included),
+      // files (checksums and markers included) and bytes
+      def walk(f: java.io.File): Seq[java.io.File] =
+        f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      val (graphDirs, graphFiles) = walk(new java.io.File(s"$dir/graph")).partition(_.isDirectory)
+      val graph = s""""graph":{"dirs":${graphDirs.size},"files":${graphFiles.size},""" +
+        s""""mb":${f(graphFiles.map(_.length).sum / 1048576.0)}}"""
       val line = s"""{"metric":"rehearsal_total","value":${f(total)},"unit":"sec",""" +
         s""""n_strains":$nStrains,"hot_factor":$hotFactor,"n_rgps":$nRgps,""" +
-        s""""stages":{$stages},"analysis":{$analysis}}"""
+        s""""stages":{$stages},"stages_cpu":{$stagesCpu},$graph,"analysis":{$analysis}}"""
       Raw.stdout.println(line)
       val out = if (hotFactor > 1) "rehearsal_out_hot.json" else "rehearsal_out.json"
       java.nio.file.Files.write(java.nio.file.Paths.get(out),

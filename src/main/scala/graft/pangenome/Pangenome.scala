@@ -14,12 +14,16 @@ import org.apache.spark.storage.StorageLevel
   * Scale posture: every table is partitionable by `Strain` (features,
   * edges) or `cluster_id`; per-strain work (ordering, windows, chains)
   * shuffles once on the strain key and stays partition-local after that.
+  * At rest the strain-keyed tables are range-clustered by strain, not
+  * split into per-strain directories ([[Schemas.writeGraph]]).
   * Genome strings (S6) are substring-extracted immediately (P6) and never
   * broadcast or shuffled with the wide tables.
   *
   * **Materialization contract**: build stages persist their outputs
-  * ([[Schemas.writeGraph]] — strain-partitioned parquet) and analyses run
-  * over the *stored* tables ([[Schemas.readGraph]]). Chaining the lazy
+  * ([[Schemas.writeGraph]] — one zstd parquet directory per table, the
+  * strain-keyed ones range-clustered by strain; FEATURE_IN_STRAIN is
+  * derived from `features` on read, not stored) and analyses run over the
+  * *stored* tables ([[Schemas.readGraph]]). Chaining the lazy
   * builders straight into the analyses re-expands the whole ETL lineage at
   * every table reference (measured: 1678 exchanges in the rgpMine plan vs
   * 18 over materialized tables — genomeTrack 605 vs 4). This mirrors the

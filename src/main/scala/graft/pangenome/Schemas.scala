@@ -7,11 +7,13 @@ import org.apache.spark.sql.functions._
   * `Encoder`s where type safety helps; `DataFrame` where schema is
   * dynamic) and the at-rest layout.
   *
-  * Layout (SURVEY §7 step 10, "100 TB posture"): features and
-  * feature-level edges are hash-partitioned *by strain* on disk, so every
-  * per-strain job (ordering, windows, chains, genome tracks) prunes to its
-  * strains' files and the orderBy-within-strain shuffle reads co-located
-  * input. Cluster tables are small by comparison and stay unpartitioned.
+  * Layout: each stored table is ONE directory of plain zstd parquet
+  * files, with no `partitionBy` directories. Features and feature-level
+  * edges are range-partitioned by strain and sorted inside each file
+  * (features in genome order, edges by source feature), so a strain
+  * predicate prunes by row-group statistics and a strain's rows sit
+  * together for the per-strain windows that read them.
+  * Cluster tables are small by comparison and keep their natural order.
   */
 object Schemas {
 
@@ -53,47 +55,56 @@ object Schemas {
     df.select("name", "avg_GC", "stDev_GC", "avg_CAI", "stDev_CAI").as[Strain]
   }
 
-  /** Persist the graph tables; strain-keyed tables partitioned by strain.
+  /** Persist the graph tables, one zstd parquet directory per table.
     *
-    * The strain-keyed frames are repartitioned ON the partition column
-    * first: without it every upstream task holds a slice of every strain
-    * and the dynamic-partition writer emits |tasks| x |strains| tiny files
-    * (at 770 strains x 32 tasks, ~25k files per table). After the
-    * repartition each task owns whole strains and writes one file per
-    * strain — the layout a 1000-executor job needs too.
+    * `features` and `feature_neighbours` are range-partitioned on the
+    * strain and sorted within each file: features by (`Start`, `Name`),
+    * the genome order, and edges by source feature. No reader prunes by
+    * directory, and per-strain directories would cost a directory and a
+    * file per strain and table, each created through a forked `chmod` on
+    * Hadoop's local filesystem; range clustering keeps a strain predicate
+    * selective through row-group min/max statistics instead. zstd, not
+    * snappy: the DNA columns (`clusters.reference_sequence`, lonely
+    * features' `FullSequences`) dominate the bytes.
     *
-    * ORTHOLOG is stored grouped by cluster: the membership frame it is read
-    * from is in feature order, and runs of one cluster_id compress better
-    * (the benchmark's 8-strain lifecycle: 286 KB, against 333 KB in feature
-    * order). Once the last table is stored, the build's cached membership
-    * frame is released.
+    * ORTHOLOG is stored grouped by cluster, ordered by
+    * (`length(cluster_id)`, `cluster_id`) so numerically adjacent families
+    * (`g2` … `g10`), whose member ids share prefixes, stay adjacent.
+    * FEATURE_IN_STRAIN is not stored: it is two columns of `features`,
+    * and [[readGraph]] derives it.
+    *
+    * Once the last table is stored, the build's cached membership frame is
+    * released, blocking until its blocks are gone, so the next stage does
+    * not run beside the removal.
     */
-  def writeGraph(g: Pangenome.GraphTables, dir: String): Unit =
+  def writeGraph(g: Pangenome.GraphTables, dir: String): Unit = {
+    def store(df: DataFrame, table: String): Unit =
+      df.write.mode("overwrite").option("compression", "zstd").parquet(s"$dir/$table")
     try {
-      g.features.repartition(col("Strain"))
-        .write.mode("overwrite").partitionBy("Strain").parquet(s"$dir/features")
-      g.featureNeighbours.repartition(col("strain"))
-        .write.mode("overwrite").partitionBy("strain")
-        .parquet(s"$dir/feature_neighbours")
-      g.clusters.write.mode("overwrite").parquet(s"$dir/clusters")
-      g.strains.write.mode("overwrite").parquet(s"$dir/strains")
-      g.ortholog.sortWithinPartitions(col("cluster_id"))
-        .write.mode("overwrite").parquet(s"$dir/ortholog")
-      g.clusterNeighbours.write.mode("overwrite").parquet(s"$dir/cluster_neighbours")
-      g.featureInStrain.repartition(col("strain"))
-        .write.mode("overwrite").partitionBy("strain")
-        .parquet(s"$dir/feature_in_strain")
-      g.clusterInStrain.write.mode("overwrite").parquet(s"$dir/cluster_in_strain")
-    } finally g.membership.foreach(_.unpersist())
+      store(g.features.repartitionByRange(col("Strain"))
+        .sortWithinPartitions(col("Strain"), col("Start"), col("Name")), "features")
+      store(g.featureNeighbours.repartitionByRange(col("strain"))
+        .sortWithinPartitions(col("strain"), col("src")), "feature_neighbours")
+      store(g.clusters, "clusters")
+      store(g.strains, "strains")
+      store(g.ortholog.sortWithinPartitions(length(col("cluster_id")), col("cluster_id")),
+        "ortholog")
+      store(g.clusterNeighbours, "cluster_neighbours")
+      store(g.clusterInStrain, "cluster_in_strain")
+    } finally g.membership.foreach(_.unpersist(blocking = true))
+  }
 
-  def readGraph(spark: SparkSession, dir: String): Pangenome.GraphTables =
+  /** The stored graph; `featureInStrain` is projected from `features`. */
+  def readGraph(spark: SparkSession, dir: String): Pangenome.GraphTables = {
+    val features = spark.read.parquet(s"$dir/features")
     Pangenome.GraphTables(
-      features = spark.read.parquet(s"$dir/features"),
+      features = features,
       clusters = spark.read.parquet(s"$dir/clusters"),
       strains = spark.read.parquet(s"$dir/strains"),
       ortholog = spark.read.parquet(s"$dir/ortholog"),
       clusterNeighbours = spark.read.parquet(s"$dir/cluster_neighbours"),
       featureNeighbours = spark.read.parquet(s"$dir/feature_neighbours"),
-      featureInStrain = spark.read.parquet(s"$dir/feature_in_strain"),
+      featureInStrain = features.select(col("Name").as("feature_id"), col("Strain").as("strain")),
       clusterInStrain = spark.read.parquet(s"$dir/cluster_in_strain"))
+  }
 }

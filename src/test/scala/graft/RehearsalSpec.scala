@@ -30,6 +30,8 @@ class RehearsalSpec extends AnyFunSuite with BeforeAndAfterAll {
         "enrich", "genome_track", "rgp_mine",
         "insertion_dice", "insertion_clusters", "anchor_phylo"))
       assert(timings.forall(_._2 > 0))
+      // every stage records the process CPU it took beside its wall time
+      assert(timings.forall(_._3 > 0), s"stage CPU seconds: $timings")
       // deterministic generator -> deterministic miner output
       assert(nRgps == 68L, s"expected the planted-island RGP count, got $nRgps")
       // the notebook-golden stats block is complete and self-consistent

@@ -1,12 +1,19 @@
 package graft
 
 import graft.pangenome.{Pangenome, Schemas}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{CacheEntries, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class SchemasSpec extends AnyFunSuite with BeforeAndAfterAll {
+import scala.jdk.CollectionConverters._
+
+class SchemasSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -18,7 +25,7 @@ class SchemasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  test("typed views + strain-partitioned round-trip with partition pruning") {
+  test("typed views + range-clustered zstd round-trip") {
     val g = Pangenome.buildGraph(spark, Pangenome.etl(spark, fixture))
     val dir = java.nio.file.Files.createTempDirectory("graft_graph").toString
     Schemas.writeGraph(g, dir)
@@ -44,12 +51,51 @@ class SchemasSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(g2c.average_length == 13.7)
     assert(g2c.min_length == 12 && g2c.max_length == 12)
 
-    // the on-disk layout is partitioned by strain and prunes
-    assert(new java.io.File(s"$dir/features/Strain=S1").isDirectory)
-    val plan = back.features.filter(col("Strain") === "S1")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("S1"), "partition filter must reach the scan")
+    // the on-disk layout: one directory of plain parquet files per table,
+    // so no Strain=/strain= directory and no stored feature_in_strain
+    val root = new java.io.File(dir)
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
+    val dirs = walk(root).filter(_.isDirectory).map(_.getName)
+    assert(dirs.toSet == Set(root.getName, "features", "feature_neighbours", "clusters",
+      "strains", "ortholog", "cluster_neighbours", "cluster_in_strain"), s"directories: $dirs")
+    // every stored file is zstd, per its own footer
+    val files = walk(root).filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.foreach { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf))
+      val codecs = try reader.getFooter.getBlocks.asScala
+        .flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+      finally reader.close()
+      assert(codecs == Set(CompressionCodecName.ZSTD), s"$f: $codecs")
+    }
+    // FEATURE_IN_STRAIN is derived from the stored features on read
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    assert(back.featureInStrain.columns.toSeq == g.featureInStrain.columns.toSeq)
+    assert(bag(back.featureInStrain) == bag(g.featureInStrain))
     assert(back.features.filter(col("Strain") === "S1").count() == 8)
+  }
+
+  test("a strain predicate prunes row groups of the range-clustered features") {
+    val t = Rehearsal.synthesize(spark, nStrains = 3)
+    val g = Pangenome.buildGraph(spark, t)
+    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    // small row groups, so each strain spans several and pruning can show
+    spark.conf.set("parquet.block.size", (64 * 1024).toString)
+    try Schemas.writeGraph(g, dir) finally spark.conf.unset("parquet.block.size")
+    val back = Schemas.readGraph(spark, dir)
+    val total = back.features.count()
+    val s001 = t.features.filter(col("Strain") === "S001").count()
+    val q = back.features.filter(col("Strain") === "S001")
+    assert(s001 > 0 && q.collect().length == s001)
+    val scans = collect(q.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.size == 1)
+    val scanned = scans.head.metrics("numOutputRows").value
+    assert(scanned < total, s"the scan read $scanned of $total rows: no row group was pruned")
+    assert(scanned >= s001)
   }
 
   test("the graph tables read one cached membership, released by writeGraph") {
@@ -69,6 +115,10 @@ class SchemasSpec extends AnyFunSuite with BeforeAndAfterAll {
     Schemas.writeGraph(g, dir)
     assert(CacheEntries.count(spark) <= cachedBefore,
       "writeGraph left the build's membership cached")
+    // the release has finished, not only been requested, once it returns
+    assert(spark.sparkContext.getRDDStorageInfo.forall(_.numCachedPartitions == 0),
+      "an RDD still holds cached partitions after writeGraph")
+    assert(CacheEntries.rddBlocks(spark) == 0, "cached RDD blocks remain after writeGraph")
   }
 
   test("analyses over materialized tables equal the lineage path and stay flat") {
