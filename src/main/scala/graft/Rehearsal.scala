@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `sbt "runMain graft.Rehearsal [nStrains]"` (default 770; the
   * spec runs a miniature). Emits one JSON line with per-stage wall seconds
-  * (`stages`) and process CPU seconds (`stages_cpu`) and writes
-  * rehearsal_out.json.
+  * (`stages`), process CPU seconds (`stages_cpu`) and executor task CPU
+  * seconds (`stages_exec_cpu`) and writes rehearsal_out.json.
   */
 object Rehearsal {
 
@@ -144,23 +144,30 @@ object Rehearsal {
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
   /** Run the lifecycle against `dir`; returns ((stage, wall seconds, process
-    * CPU seconds) per stage, rgp rows, analysis stats). Process CPU counts
-    * every thread of the JVM (executors, JIT, collector), so a stage that
-    * reads slower in wall but not in CPU waited on the host, not on the
-    * program. The stats block mirrors BASELINE.md's notebook-golden
-    * table (RGPs.ipynb cells 12/25/35/38/54/67/89-91) so each round's
+    * CPU seconds, executor CPU seconds) per stage, rgp rows, analysis
+    * stats). Process CPU counts every thread of the JVM (executors, JIT,
+    * collector), so a stage that reads slower in wall but not in CPU waited
+    * on the host, not on the program. Executor CPU is the CPU time of the
+    * stage's Spark tasks ([[Probe.withStages]]); the rest of its process
+    * CPU went to the driver, the JIT and the collector. The stats block
+    * mirrors BASELINE.md's notebook-golden table (RGPs.ipynb cells
+    * 12/25/35/38/54/67/89-91) so each round's
     * rehearsal reports the same cardinalities the reference recorded at
     * full scale — in ratio form against the synthetic shape, since the
     * real 770-genome dataset is not in the sandbox.
     */
   def run(spark: SparkSession, nStrains: Int, dir: String, hotFactor: Int = 1)
-      : (Seq[(String, Double, Double)], Long, Seq[(String, String)]) = {
-    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
+      : (Seq[(String, Double, Double, Double)], Long, Seq[(String, String)]) = {
+    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Double)]
     def stage[A](name: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val c0 = osBean.getProcessCpuTime
-      val r = body
-      timings += ((name, (System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9))
+      // the listener's settling wait falls outside the timed region
+      val ((r, wallS, cpuS), stages) = Probe.withStages(spark) {
+        val t0 = System.nanoTime()
+        val c0 = osBean.getProcessCpuTime
+        val r = body
+        (r, (System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
+      }
+      timings += ((name, wallS, cpuS, stages.map(_.cpuS).sum))
       r
     }
 
@@ -207,7 +214,7 @@ object Rehearsal {
 
     // the downstream analysis lifecycle (RGPs.ipynb cells 44-93) through
     // the library's designated SCALE branches: LSH candidate generation
-    // (ids-only banding) for the Dice pairs, LSH graph + GraphX connected
+    // (ids-only banding) for the Dice pairs, LSH graph + union-find connected
     // components for the flat clustering, broadcast LCA index for the
     // phylo spread — maxExactRows/maxDriverN forced low so the rehearsal
     // exercises the paths a 100 TB run would take, not the small-N exacts
@@ -305,8 +312,9 @@ object Rehearsal {
       val (timings, nRgps, stats) = run(spark, nStrains, dir, hotFactor)
       val total = timings.map(_._2).sum
       def f(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-      val stages = timings.map { case (k, v, _) => s""""$k":${f(v)}""" }.mkString(",")
-      val stagesCpu = timings.map { case (k, _, c) => s""""$k":${f(c)}""" }.mkString(",")
+      val stages = timings.map { case (k, v, _, _) => s""""$k":${f(v)}""" }.mkString(",")
+      val stagesCpu = timings.map { case (k, _, c, _) => s""""$k":${f(c)}""" }.mkString(",")
+      val stagesExecCpu = timings.map { case (k, _, _, e) => s""""$k":${f(e)}""" }.mkString(",")
       // stats values are numeric strings built with Locale.ROOT — emit bare
       val analysis = stats.map { case (k, v) => s""""$k":$v""" }.mkString(",")
       // the stored graph's footprint: directories (its root included),
@@ -318,7 +326,8 @@ object Rehearsal {
         s""""mb":${f(graphFiles.map(_.length).sum / 1048576.0)}}"""
       val line = s"""{"metric":"rehearsal_total","value":${f(total)},"unit":"sec",""" +
         s""""n_strains":$nStrains,"hot_factor":$hotFactor,"n_rgps":$nRgps,""" +
-        s""""stages":{$stages},"stages_cpu":{$stagesCpu},$graph,"analysis":{$analysis}}"""
+        s""""stages":{$stages},"stages_cpu":{$stagesCpu},"stages_exec_cpu":{$stagesExecCpu},""" +
+        s"""$graph,"analysis":{$analysis}}"""
       Raw.stdout.println(line)
       val out = if (hotFactor > 1) "rehearsal_out_hot.json" else "rehearsal_out.json"
       java.nio.file.Files.write(java.nio.file.Paths.get(out),

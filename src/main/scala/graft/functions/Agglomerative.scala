@@ -6,9 +6,9 @@ package graft.functions
   *
   * Deliberately driver-side: the reference clusters N≈5k insertions, for
   * which an O(N²)-memory Lance-Williams pass is fine. The 100 TB-scale path
-  * is MinHash-LSH bucketing + GraphX connected components (see
-  * PipelineOps/GraphFallback) — this exact-linkage kernel stays for
-  * reference-fidelity on collected condensed distances.
+  * is MinHash-LSH bucketing + connected components (see
+  * `Similarity.cluster`, `operators/Components`) — this exact-linkage
+  * kernel stays for reference-fidelity on collected condensed distances.
   *
   * Memory: the matrix is stored condensed (upper triangle, one flat
   * allocation) — n(n−1)/2 doubles, half a full n×n and no per-row object

@@ -2062,18 +2062,17 @@ object PipelineOps {
     // exact integer-quantized cosine verifies them, and connected
     // components collapse duplicate groups to a canonical member (min
     // vec_id). Every vector appears once; non-duplicates map to
-    // themselves. Components are GraphX-iterative (actions inside the
-    // builder, like c3's documented exception). Scale shape: the band
-    // self-join carries IDS ONLY (d2's contract — vectors never ride the
-    // band shuffle), the verified dup mapping is materialized to a scratch
-    // parquet (the natural shuffle-boundary checkpoint at 100 TB), and
-    // every cache the query created — dupPairs AND GraphX's Pregel
-    // internals — is released before the final lazy plan is returned, so
-    // nothing leaks into later queries of the session.
+    // themselves. Components runs its union-find rounds while the plan is
+    // built (actions inside the builder, like c3's documented exception).
+    // Scale shape: the band self-join carries IDS ONLY (d2's contract —
+    // vectors never ride the band shuffle), and the dup mapping is
+    // materialized to a scratch parquet (the natural shuffle-boundary
+    // checkpoint at 100 TB) with every cache of the rounds released before
+    // the final lazy plan is returned, so nothing leaks into later queries
+    // of the session.
     QueryDef(
       "d8_embedding_neardup",
       (s, d) => {
-        val cachedBefore = s.sparkContext.getPersistentRDDs.keySet
         graft.functions.GraftExtensions.registerInto(s)
         val q = expr("transform(embedding, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))")
         // band shuffle carries (band, vec_id) only; q/nn join back per
@@ -2104,37 +2103,11 @@ object PipelineOps {
               sqrt(col("n1").cast("double") * col("n2").cast("double")))
           .filter(col("cos") >= 0.98)
           .select(col("id1"), col("id2"))
-          // CC is GraphX-iterative: its vertex and edge RDDs each pull
-          // from this plan, so persist the verified pairs once — the
-          // isEmpty probe and both CC inputs then read the cache instead
-          // of re-running the candidate-join + cosine-verify pipeline.
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // clean corpora are the common case: skip the iterative CC jobs
-        // entirely when no pair survives verification
-        val mapped =
-          if (dupPairs.isEmpty) {
-            dupPairs.unpersist(blocking = true)
-            import s.implicits._
-            Seq.empty[(Long, Long)].toDF("vid", "cid")
-          } else {
-            val comp = graft.pangenome.GraphFallback.similarityComponents(s, dupPairs)
-            val canon = comp.groupBy(col("component"))
-              .agg(min(col("member").cast("long")).as("cid"))
-            val plan = comp.join(canon, "component")
-              .select(col("member").cast("long").as("vid"), col("cid"))
-            // materialize the (small) dup mapping once, then drop every
-            // cache this query created: our own pairs persist explicitly,
-            // GraphX's internals via the level-filtered sweep (which
-            // leaves other threads' MEMORY_AND_DISK persists alone); the
-            // returned plan reads the scratch parquet, so nothing
-            // downstream needs the caches
-            val scratch = Scratch.uniqueDir(s, "d8_mapped")
-            plan.write.mode("overwrite").parquet(scratch)
-            dupPairs.unpersist(blocking = true)
-            graft.pangenome.GraphFallback
-              .releaseGraphXCaches(s.sparkContext, cachedBefore)
-            s.read.parquet(scratch)
-          }
+        // each dup group's component is its smallest vec_id, the
+        // canonical member; Components reads the verified pairs once and
+        // hands back a plan over its scratch labels, holding no cache
+        val mapped = Components(dupPairs, "id1", "id2", prefix = "d8_mapped")
+          .select(col("member").as("vid"), col("component").as("cid"))
         T.embeddings(s, d).select(col("vec_id"))
           .join(mapped, col("vec_id") === col("vid"), "left")
           .select(col("vec_id"),
@@ -2145,7 +2118,7 @@ object PipelineOps {
       },
       // Full re-derivation in DuckDB including the connected components:
       // the 32-plane signature / bands / verified pairs are the d6-style
-      // exact arithmetic, and GraphX's CC becomes a recursive-CTE
+      // exact arithmetic, and the connected components become a recursive-CTE
       // transitive closure (union-distinct terminates; dup groups are
       // tiny by construction) with canonical = least(v, min reachable).
       // Planted-duplicate groups additionally pinned in AnnSpec.

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Session-scoped scratch location for intra-query materialization — the
   * shuffle-boundary checkpoint pattern: write a small derived table once,
   * read it back, and release every upstream cache so iterative stages
-  * (GraphX CC, multi-pass sketches) never leak state into later queries.
+  * (connected-component rounds, multi-pass sketches) never leak state into
+  * later queries.
   *
   * Locally this lands under `java.io.tmpdir`; on a real cluster set
   * `graft.scratch.dir` to a cluster-visible path (HDFS/S3) — the

@@ -212,9 +212,10 @@ object Similarity {
   /** Flat clustering at jaccard-distance `cutoff` (C3/C4). Below
     * `maxDriverN` rows: the reference's exact complete-linkage on the
     * driver (scipy linkage+fcluster fidelity). Above: MinHash-LSH
-    * similarity graph + GraphX connected components — single-linkage
-    * semantics, the documented 100 TB analogue (a complete-linkage
-    * dendrogram needs the full distance matrix by definition).
+    * similarity graph, derived once, + [[Components]]' union-find rounds
+    * — single-linkage semantics, the documented 100 TB analogue (a
+    * complete-linkage dendrogram needs the full distance matrix by
+    * definition).
     * Returns (id, label); labels are dense, ordered by each cluster's
     * minimum id, so both branches are deterministic.
     *
@@ -282,47 +283,31 @@ object Similarity {
         .select(col("id"), col("label").cast("long").as("label"))
     } else {
       val minSim = 1.0 - cutoff
-      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
       val edges = jaccardPairs(sets, idCol, setCol, minSim, maxExactRows = 0,
         forceLsh = true)
-      val ids = sets.select(col(idCol).cast("string").as("id"))
-      // GraphX CC is iterative and caches its graph + Pregel internals at
-      // call time. Materialize the (small) membership once at the natural
-      // shuffle boundary, release every cache this call created, and hand
-      // back a plan that reads the scratch parquet — d8's contract, so
-      // repeated cluster() calls never accumulate session state.
-      val comp0 = graft.pangenome.GraphFallback
-        .similarityComponents(spark, edges)
+        .select(col("id1").cast("string").as("id1"), col("id2").cast("string").as("id2"))
+      // the verified edge set is derived once, inside Components, which
+      // hands back a plan over its scratch labels and keeps no cache
+      val comp = Components(edges, "id1", "id2", prefix = "simcluster")
         .select(col("member").as("id"), col("component"))
-      val scratch = Scratch.uniqueDir(spark, "simcluster")
-      comp0.write.mode("overwrite").parquet(scratch)
-      graft.pangenome.GraphFallback
-        .releaseGraphXCaches(spark.sparkContext, cachedBefore)
-      val comp = spark.read.parquet(scratch)
-      // singletons (no qualifying edge) keep their own cluster; the
-      // struct tag keeps the singleton keyspace disjoint from GraphX
-      // component ids (both are 64-bit hashes — a collision would
-      // otherwise silently merge a singleton into an unrelated cluster)
-      val withComp = ids.join(comp, Seq("id"), "left")
-        .withColumn("comp",
-          when(col("component").isNotNull,
-            struct(lit(0).as("t"), col("component").as("k")))
-            .otherwise(struct(lit(1).as("t"), xxhash64(col("id")).as("k"))))
+      // a singleton (no qualifying edge) is its own component: both are
+      // the smallest member id, so the component names its cluster
+      val withComp = sets.select(col(idCol).cast("string").as("id"))
+        .join(comp, Seq("id"), "left")
+        .select(col("id"), coalesce(col("component"), col("id")).as("comp"))
       // dense labels ordered by each component's min id. NOT a global
       // row_number() window (an un-partitioned Window funnels every rep
       // through ONE task — a scale-killer in the branch that exists for
       // >maxDriverN inputs): range-partitioned sort + zipWithIndex keeps
       // the ranking fully parallel (zipWithIndex = one light count pass
       // for per-partition offsets, then local index assignment).
-      val rep = withComp.groupBy(col("comp")).agg(min(col("id")).as("rep"))
-      val sorted = rep.orderBy(col("rep"))
+      val sorted = withComp.select(col("comp")).distinct().orderBy(col("comp"))
       val labeled = spark.createDataFrame(
         sorted.rdd.zipWithIndex.map { case (r, i) =>
           org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
         },
         sorted.schema.add("label", org.apache.spark.sql.types.LongType))
-      withComp.join(labeled.select(col("comp"), col("label")), "comp")
-        .select(col("id"), col("label"))
+      withComp.join(labeled, "comp").select(col("id"), col("label"))
     }
   }
 }

@@ -600,7 +600,11 @@ object Pangenome {
   /** C3/C4 over insertions: flat clustering of the Dice/Jaccard structure,
     * size-dispatched ([[graft.operators.Similarity.cluster]]) — exact
     * complete-linkage (scipy fidelity, RGPs.ipynb cells 85-93) on the
-    * driver at reference scale, LSH graph + connected components beyond.
+    * driver at reference scale; beyond `maxDriverN`, the LSH-verified
+    * edge set, derived once, grouped by [[graft.operators.Components]]'
+    * per-partition union-find rounds. The insertion id is
+    * `Strain|pos1|pos2`; labels are dense, ordered by each cluster's
+    * smallest id.
     */
   def insertionClusters(
       insertions: DataFrame, cutoff: Double = 0.3,

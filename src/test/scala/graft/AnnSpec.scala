@@ -66,17 +66,22 @@ class AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
-    // cache lifetime is bounded to the query: the verified-pair persist and
-    // every GraphX internal must be released once the mapping is
-    // materialized to scratch — d8 may not ADD a single live cache (other
-    // queries' documented session caches, e.g. d7's base frame, may exist)
+    // cache lifetime is bounded to the query: every cache of the component
+    // rounds must be released once the mapping is materialized to scratch
+    // — d8 may not ADD a single live cache (other queries' documented
+    // session caches, e.g. d7's base frame, may exist): registered caches,
+    // cache-manager entries and RDD blocks all return to their values
+    import org.apache.spark.sql.CacheEntries
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (entries, blocks) = (CacheEntries.count(spark), CacheEntries.rddBlocks(spark))
     val out = SparkEntry.queries("d8_embedding_neardup")(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
     val leaked = spark.sparkContext.getPersistentRDDs.filterNot {
       case (id, _) => cachedBefore.contains(id)
     }
     assert(leaked.isEmpty, s"d8 leaked caches: ${leaked.values.map(_.name)}")
+    assert(CacheEntries.count(spark) == entries, "d8 left a cache-manager entry")
+    assert(CacheEntries.rddBlocks(spark) == blocks, "d8 left RDD blocks")
     assert(out.size == 40)
     (0 until 10).foreach { i =>
       assert(out(100L + i) == (i.toLong, 1), s"dup of base $i not canonicalized")

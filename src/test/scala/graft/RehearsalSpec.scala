@@ -30,8 +30,10 @@ class RehearsalSpec extends AnyFunSuite with BeforeAndAfterAll {
         "enrich", "genome_track", "rgp_mine",
         "insertion_dice", "insertion_clusters", "anchor_phylo"))
       assert(timings.forall(_._2 > 0))
-      // every stage records the process CPU it took beside its wall time
+      // every stage records the process CPU it took beside its wall time,
+      // and the CPU its Spark tasks took, which is a part of the former
       assert(timings.forall(_._3 > 0), s"stage CPU seconds: $timings")
+      assert(timings.forall(t => t._4 >= 0 && t._4 <= t._3), s"executor CPU seconds: $timings")
       // deterministic generator -> deterministic miner output
       assert(nRgps == 68L, s"expected the planted-island RGP count, got $nRgps")
       // the notebook-golden stats block is complete and self-consistent

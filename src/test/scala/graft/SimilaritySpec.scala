@@ -180,16 +180,34 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("cluster big-N branch: releases every cache it creates") {
-    // GraphX CC caches its graph + Pregel internals; the branch must
+    // the component rounds cache their gathered roots; the branch must
     // materialize membership to scratch and release them (d8's contract),
     // or repeated cluster() calls accumulate executor memory for the app's
-    // lifetime
+    // lifetime. Registered caches, cache-manager entries and the block
+    // managers' RDD blocks all return to their values from before the call.
+    import org.apache.spark.sql.CacheEntries
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (entries, blocks) = (CacheEntries.count(spark), CacheEntries.rddBlocks(spark))
     val dist = Similarity.cluster(plantedSets, "id", "toks", cutoff = 0.3,
       maxDriverN = 10)
     dist.count()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persistent RDDs: $leaked")
+    assert(CacheEntries.count(spark) == entries, "cache-manager entries leaked")
+    assert(CacheEntries.rddBlocks(spark) == blocks, "RDD blocks leaked")
+  }
+
+  test("cluster big-N branch: the LSH pipeline runs in one query execution") {
+    // the verified edge set is derived once and handed to Components; a
+    // second executed plan carrying minhash_bands re-runs the whole
+    // banding, candidate join and verification. The repartition keeps the
+    // optimizer from folding the band keys into the local fixture.
+    val sets = plantedSets.repartition(4)
+    val plans = org.apache.spark.sql.QueryExecutions.plans(spark) {
+      Similarity.cluster(sets, "id", "toks", cutoff = 0.3, maxDriverN = 10).count(): Unit
+    }
+    val lsh = plans.count(_.contains("minhash_bands"))
+    assert(lsh == 1, s"$lsh executed plans run the LSH pipeline")
   }
 
   test("cluster big-N branch: no single-partition exchange in the label plan") {

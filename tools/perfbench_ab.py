@@ -5,7 +5,7 @@ Usage:
 
     python3 tools/perfbench_ab.py <parent-checkout> <change-checkout> \\
         --workload lifecycle --pairs 6 --seed0 11 [--seconds 10] [--trace 0|1] \\
-        [--json ab.json]
+        [--compare-output <call>] [--json ab.json]
 
 Pair i uses seed `seed0 + i` on both sides and alternates which side runs
 first (the parent on even pairs, the change on odd ones), so a drift of the
@@ -27,39 +27,103 @@ a tie is no win). Every run that is not correct, and every failed operation,
 is listed. With --trace 1 the metrics are perfbench's per-layer ones, and the
 per-call process CPU of each call (`<call>.cpu_s`) is added from the run's
 trace file.
+
+With --compare-output <call>, each run keeps its scratch directory
+(`run.py --keep`) until its pair is done. The call's stored parquet
+(`<round dir>/<call>`, as the lifecycle's analyses and every suite query
+store it) must then be row-identical, after sorting, in every round of both
+sides: DuckDB reads each one and the rows are compared with the parent's first
+round. The per-call `<call>.cpu_s` metrics come from the kept manifests, so
+no trace is needed, and the directories are deleted after the comparison.
 """
 import argparse
+import glob
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
 
 
-def run_once(checkout, workload, seed, seconds, trace):
-    """One perfbench run in `checkout`; returns (result, failed-op lines)."""
+def per_call_cpu(calls):
+    """`<call>.cpu_s` metrics: each call's median process CPU over the
+    calls that succeeded."""
+    per_call = {}
+    for c in calls:
+        if c["ok"]:
+            per_call.setdefault(c["name"], []).append(c["cpu_s"])
+    return {f"{name}.cpu_s": {"value": statistics.median(xs), "unit": "s"}
+            for name, xs in per_call.items()}
+
+
+def run_once(checkout, workload, seed, seconds, trace, keep=False):
+    """One perfbench run in `checkout`; returns (result, failed-op lines,
+    the kept run directory or None)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", str(trace)]
+           "--seconds", str(seconds), "--trace", str(trace)] + (["--keep"] if keep else [])
+    runs = os.path.join(checkout, ".bench_build", "runs", f"{workload}-seed{seed}-*")
+    before = set(glob.glob(runs))
     p = subprocess.run(cmd, cwd=checkout, stdin=subprocess.DEVNULL, capture_output=True,
                        text=True)
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     failed = [ln for ln in p.stderr.splitlines() if " failed: " in ln]
+    kept = sorted(set(glob.glob(runs)) - before, key=os.path.getmtime)
+    run_dir = kept[-1] if keep and kept else None
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-3000:])
         return {"correct": False, "attempted": 0, "failed": None, "metrics": {},
-                "error": f"exit {p.returncode}"}, failed
+                "error": f"exit {p.returncode}"}, failed, run_dir
     result = json.loads(lines[-1])
     if trace:
         path = os.path.join(checkout, ".bench_build", "traces", f"{workload}-seed{seed}.json")
         with open(path) as fh:
-            spans = json.load(fh)["spans"]
-        per_call = {}
-        for s in spans:
-            if s["ok"]:
-                per_call.setdefault(s["name"], []).append(s["cpu_s"])
-        for name, xs in per_call.items():
-            result["metrics"][f"{name}.cpu_s"] = {"value": statistics.median(xs), "unit": "s"}
-    return result, failed
+            result["metrics"].update(per_call_cpu(json.load(fh)["spans"]))
+    elif run_dir:
+        with open(os.path.join(run_dir, "manifest.json")) as fh:
+            rounds = json.load(fh)["rounds"]
+        result["metrics"].update(per_call_cpu([c for r in rounds for c in r["calls"]]))
+    return result, failed, run_dir
+
+
+def stored_rows(run_dir, call):
+    """[(round, columns, sorted rows)] of the call's stored parquet, one per
+    round of the run."""
+    import duckdb
+    with open(os.path.join(run_dir, "manifest.json")) as fh:
+        rounds = json.load(fh)["rounds"]
+    out = []
+    con = duckdb.connect()
+    try:
+        for r in rounds:
+            path = os.path.join(r["dir"], call)
+            rel = con.sql(f"SELECT * FROM read_parquet('{path}/*.parquet') ORDER BY ALL")
+            out.append((r["round"], rel.columns, rel.fetchall()))
+    finally:
+        con.close()
+    return out
+
+
+def compare_output(call, dirs):
+    """Problems found comparing the call's output of the pair's two kept
+    runs (`dirs`: side -> run directory); empty when every round of both
+    sides is row-identical to the parent's first round."""
+    if None in dirs.values():
+        return ["a run kept no directory"]
+    try:
+        sides = {side: stored_rows(d, call) for side, d in dirs.items()}
+    except Exception as e:  # a missing or unreadable output
+        return [f"{type(e).__name__}: {e}"]
+    if not sides["parent"]:
+        return ["the parent ran no round"]
+    _, cols, rows = sides["parent"][0]
+    problems = []
+    for side, rounds in sides.items():
+        for r, c, got in rounds:
+            if c != cols or got != rows:
+                problems.append(f"{side} round {r}: {len(got)} rows differ from the "
+                                f"parent's first round ({len(rows)} rows)")
+    return problems
 
 
 def iqr(xs):
@@ -89,20 +153,37 @@ def main(argv=None):
     ap.add_argument("--seed0", type=int, required=True)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--compare-output", metavar="CALL",
+                    help="check that this call's stored output is row-identical across "
+                         "every pair, and report per-call cpu_s")
     ap.add_argument("--json", help="write every run's result to this file")
     a = ap.parse_args(argv)
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
 
     runs = []  # (pair, side, seed, result, failed lines)
+    mismatched = []  # (pair, seed, problem)
+    keep = a.compare_output is not None
     for i in range(a.pairs):
         seed = a.seed0 + i
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        for side in order:
-            result, failed = run_once(sides[side], a.workload, seed, a.seconds, a.trace)
-            runs.append((i, side, seed, result, failed))
-            print(f"pair {i} seed {seed} {side}: correct={result['correct']} "
-                  f"failed={result['failed']}/{result['attempted']}", file=sys.stderr,
-                  flush=True)
+        dirs = {}
+        try:
+            for side in order:
+                result, failed, dirs[side] = run_once(sides[side], a.workload, seed,
+                                                      a.seconds, a.trace, keep)
+                runs.append((i, side, seed, result, failed))
+                print(f"pair {i} seed {seed} {side}: correct={result['correct']} "
+                      f"failed={result['failed']}/{result['attempted']}", file=sys.stderr,
+                      flush=True)
+            if keep:
+                problems = compare_output(a.compare_output, dirs)
+                mismatched += [(i, seed, p) for p in problems]
+                print(f"pair {i} seed {seed} {a.compare_output}: "
+                      f"{'; '.join(problems) or 'row-identical'}", file=sys.stderr, flush=True)
+        finally:
+            for d in dirs.values():
+                if d:
+                    shutil.rmtree(d, ignore_errors=True)
 
     better = directions(sides["change"])
     by = {(i, side): r for i, side, _, r, _ in runs}
@@ -131,6 +212,11 @@ def main(argv=None):
     for i, side, seed, _, failed in runs:
         for ln in failed:
             print(f"  pair {i} seed {seed} {side}: {ln.strip()}")
+    if keep:
+        print(f"{a.compare_output} output differs in {len({i for i, _, _ in mismatched})} "
+              f"of {a.pairs} pairs")
+        for i, seed, problem in mismatched:
+            print(f"  pair {i} seed {seed}: {problem}")
     if a.json:
         with open(a.json, "w") as fh:
             json.dump([{"pair": i, "side": side, "seed": seed, "result": r}
