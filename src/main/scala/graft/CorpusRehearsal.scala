@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Ivf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -761,23 +762,14 @@ object CorpusRehearsal {
           if (!denseIvf) corpusVecs.join(broadcast(queries))
           else {
             val nVec = corpusVecs.count()
-            val strideIvf = math.max(1L, nVec / 128L)
-            val cents = corpusVecs.filter(col("vec_id") % strideIvf === 0)
-              .select(col("vec_id").as("cid"), col("q").as("cq"), col("nn").as("cn"))
-            val simToCent = expr(
-              "long_dot(q, cq)")
-              .cast("double") / sqrt(col("nn").cast("double") * col("cn").cast("double"))
-            val assigned = corpusVecs.join(broadcast(cents))
-              .withColumn("sim", simToCent)
-              .groupBy(col("vec_id"))
-              .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("list_id"))
-            val probes = queries
-              .select(col("qdoc"), col("qq").as("q"), col("qn").as("nn"))
-              .join(broadcast(cents))
-              .withColumn("sim", simToCent)
-              .withColumn("prk", row_number().over(
-                Window.partitionBy(col("qdoc")).orderBy(col("sim").desc, col("cid"))))
-              .filter(col("prk") <= 2)
+            val strideIvf = Ivf.stride(nVec, 1L, 128L)
+            val cents = Ivf.centroids(corpusVecs, col("vec_id") % strideIvf === 0,
+              "vec_id" -> "cid")
+            val assigned = Ivf.assign(corpusVecs, Seq("vec_id"), cents, Seq("cid"))
+              .select(col("vec_id"), col("cid").as("list_id"))
+            val probes = Ivf.probe(
+                queries.select(col("qdoc"), col("qq").as("q"), col("qn").as("nn")),
+                Seq("qdoc"), cents, Seq("cid"), 2)
               .select(col("qdoc"), col("q").as("qq"), col("nn").as("qn"),
                 col("cid").as("probe_list"))
             corpusVecs.join(assigned, "vec_id")
@@ -807,22 +799,12 @@ object CorpusRehearsal {
         put(s"n_hybrid_both_legs$sfx", r.getLong(3))
       }
     }
-    // SPARK_GRAFT_REHEARSAL_RETR_ORDER=reverse runs the triple in
-    // reverse — the r13 position-vs-plan discriminator for the observed
-    // stage-order inversion (if a variant's cost moves with its POSITION
-    // in the sequence the effect is JVM/cache aging, not plan shape)
-    val triple = Seq[(String, Option[Long], Boolean)](
-      ("hybrid_retrieve", None, false),
-      ("hybrid_retrieve_pruned", Some(10000L), false),
-      // x12c's production shape: pruned postings + IVF dense leg — the
-      // stage triple decomposes the fused cost (unpruned vs pruned = the
-      // lexical fan-out; pruned vs ivf = the dense candidate volume)
-      ("hybrid_retrieve_ivf", Some(10000L), true))
-    val ordered =
-      if (sys.env.get("SPARK_GRAFT_REHEARSAL_RETR_ORDER").contains("reverse"))
-        triple.reverse
-      else triple
-    ordered.foreach { case (tag, ppm, ivf) => hybridRetrieve(tag, ppm, ivf) }
+    hybridRetrieve("hybrid_retrieve", None)
+    hybridRetrieve("hybrid_retrieve_pruned", Some(10000L))
+    // x12c's production shape: pruned postings + IVF dense leg — the
+    // stage triple decomposes the fused cost (unpruned vs pruned = the
+    // lexical fan-out; pruned vs ivf = the dense candidate volume)
+    hybridRetrieve("hybrid_retrieve_ivf", Some(10000L), denseIvf = true)
 
     // X12d at rehearsal scale (r14): run the DISPATCH itself on the
     // rehearsal's own cardinalities and execute whichever leg it picks.
@@ -888,8 +870,8 @@ object CorpusRehearsal {
       val emb = spark.read.parquet(s"$dir/embeddings").persist(mem)
       val nVec = emb.count()
       val nQ = 20
-      val strideIvf = math.max(1L, nVec / 128L)
-      val stridePq = math.max(1L, nVec / 64L)
+      val strideIvf = Ivf.stride(nVec, 1L, 128L)
+      val stridePq = Ivf.stride(nVec, 1L, 64L)
       // queries = planted NEAR-DUP docs (id % 41 == 1): their true
       // nearest neighbor is the seed doc at cos ≈ 0.99 — a GENUINE
       // neighbor. The synthetic corpus has no similarity structure
@@ -920,22 +902,12 @@ object CorpusRehearsal {
         .persist(mem)
       // IVF: stride-sampled centroids, every vector assigned to its best
       // list, queries probe their top-2 lists (d7's geometry)
-      val cents = emb.filter(col("vec_id") % strideIvf === 0)
-        .select(col("vec_id").as("cid"), col("q").as("cq"), col("nn").as("cn"))
-      val simToCent = expr(
-        "long_dot(q, cq)")
-        .cast("double") / sqrt(col("nn").cast("double") * col("cn").cast("double"))
-      val assigned = emb.join(broadcast(cents))
-        .withColumn("sim", simToCent)
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("list_id"))
-      val probes = queries
-        .select(col("qid"), col("qq").as("q"), col("qn").as("nn"))
-        .join(broadcast(cents))
-        .withColumn("sim", simToCent)
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))))
-        .filter(col("rk") <= 2)
+      val cents = Ivf.centroids(emb, col("vec_id") % strideIvf === 0, "vec_id" -> "cid")
+      val assigned = Ivf.assign(emb, Seq("vec_id"), cents, Seq("cid"))
+        .select(col("vec_id"), col("cid").as("list_id"))
+      val probes = Ivf.probe(
+          queries.select(col("qid"), col("qq").as("q"), col("qn").as("nn")),
+          Seq("qid"), cents, Seq("cid"), 2)
         .select(col("qid"), col("cid").as("probe_list"))
       val cand = probes.join(assigned,
           col("list_id") === col("probe_list") && col("vec_id") =!= col("qid"))
@@ -944,25 +916,11 @@ object CorpusRehearsal {
       val nCand = cand.count()
       // PQ: 4 subspaces × 8 dims, stride-sampled codebooks, codes for
       // the candidate-bearing corpus, per-query ADC tables (d16's shape)
-      val subs = emb.select(col("vec_id"),
-        posexplode(expr(
-          "transform(sequence(0, 3), b -> slice(q, b * 8 + 1, 8))"))
-          .as(Seq("b", "s")))
-      val pqCents = subs.filter(col("vec_id") % stridePq === 0)
-        .select(col("b"), col("vec_id").as("pcid"), col("s").as("cs"))
-      val sqDist = expr(
-        "long_sqdist(s, cs)")
-      val codes = subs.join(broadcast(pqCents), Seq("b"))
-        .withColumn("dist", sqDist)
-        .groupBy(col("vec_id"), col("b"))
-        .agg(min_by(col("pcid"), struct(col("dist"), col("pcid"))).as("pcid"))
-      val adc = queries
-        .select(col("qid"), posexplode(expr(
-          "transform(sequence(0, 3), b -> slice(qq, b * 8 + 1, 8))"))
-          .as(Seq("b", "s")))
-        .join(broadcast(pqCents), Seq("b"))
-        .withColumn("qdist", sqDist)
-        .select(col("qid"), col("b"), col("pcid"), col("qdist"))
+      val subs = emb.select(col("vec_id"), Ivf.subspaces("q", 4, 8).as(Seq("b", "s")))
+      val book = Ivf.codebook(subs, "vec_id", col("vec_id") % stridePq === 0)
+      val codes = Ivf.encode(subs, "vec_id", book)
+      val adc = Ivf.distances(
+        queries.select(col("qid"), Ivf.subspaces("qq", 4, 8).as(Seq("b", "s"))), "qid", book)
       val approx = cand.join(codes, "vec_id")
         .join(broadcast(adc), Seq("qid", "b", "pcid"))
         .groupBy(col("qid"), col("vec_id"))

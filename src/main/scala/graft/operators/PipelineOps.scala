@@ -471,6 +471,68 @@ object PipelineOps {
       "x12_docemb", d)
   }
 
+  /** d7's centroid stride over `embeddings`: K ≈ min(N/50, 4096). At the
+    * test scales N/4096 < 50, so the oracles' literal 50 holds there. */
+  private def d7Stride(s: org.apache.spark.sql.SparkSession, d: String): Long =
+    Ivf.stride(T.footerRowCount(s, d, "embeddings"), 50L, 4096L)
+
+  /** d7's IVF index over the shared quantized base, built by one code path
+    * for d7, x14 and x15 so their plans are canonically identical and the
+    * session holds one `d7_lists` entry for all three and every warm rep
+    * (an IVF index is built once per session, not once per consumer).
+    * Returns the base, the lists `(vec_id, list_id)` and the vec_id < 10
+    * queries' 2 nearest lists `(qid, qq, qn, probe_list)`.
+    */
+  private def d7Index(s: org.apache.spark.sql.SparkSession,
+      d: String): (DataFrame, DataFrame, DataFrame) = {
+    val base = Ivf.base(s, d)
+    val cents = Ivf.centroids(base, col("vec_id") % d7Stride(s, d) === 0, "vec_id" -> "cid")
+    val lists = SharedFrame(
+      Ivf.assign(base, Seq("vec_id"), cents, Seq("cid"))
+        .select(col("vec_id"), col("cid").as("list_id")),
+      "d7_lists", d)
+    val probes = Ivf.probe(base.filter(col("vec_id") < 10), Seq("vec_id"), cents, Seq("cid"), 2)
+      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nn").as("qn"),
+        col("cid").as("probe_list"))
+    (base, lists, probes)
+  }
+
+  /** d16's and x15's PQ codebook stride (r14, the x12e rule applied
+    * family-wide): ≤ 256 codewords per subspace, 8-bit-code geometry
+    * (Jégou et al.'s k*). The encode join is O(N·K) per subspace, and a
+    * footer-scaled K is a scale term, not accuracy: an 8-bit code cannot
+    * address more than 256 entries. Below 12,800 vectors (footer/256 < 50)
+    * it floors at the stride 50 the DuckDB oracles hardcode. */
+  private def d16Stride(s: org.apache.spark.sql.SparkSession, d: String): Long =
+    Ivf.stride(T.footerRowCount(s, d, "embeddings"), 50L, 256L)
+
+  /** x14's and x15's recall@5 of an approximate answer `(qid, eid)` for the
+    * vec_id < 10 queries. The ground truth is d5's brute-force top-5 over
+    * the base, one shared entry (`ann_gt_top5`) for both self-evaluations
+    * and every warm rep. Every query keeps a row, 0 hits included.
+    */
+  private def annRecall(base: DataFrame, approx: DataFrame, d: String): DataFrame = {
+    val queries = base.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("q").as("qq"), col("nn").as("qn"))
+    val gt = SharedFrame(
+      base.join(broadcast(queries), col("vec_id") =!= col("qid"))
+        .withColumn("cos",
+          expr("long_dot(q, qq)").cast("double") /
+            sqrt(col("qn").cast("double") * col("nn").cast("double")))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
+        .filter(col("rk") <= 5)
+        .select(col("qid"), col("vec_id").as("eid")),
+      "ann_gt_top5", d)
+    gt.join(approx, Seq("qid", "eid"), "left_semi")
+      .groupBy(col("qid")).agg(count(lit(1)).as("n_hit"))
+      .join(gt.select(col("qid")).distinct(), Seq("qid"), "right")
+      .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
+      .withColumn("recall", col("n_hit").cast("double") / 5.0)
+      .select(col("qid"), col("n_hit"), col("recall"))
+      .orderBy(col("qid"))
+  }
+
   /** Executable form of COVERAGE.md's retrieval-family decision rule
     * (r12 wrote the rule as prose + measured anchors; r13 makes it a
     * dispatch): the exact dense leg's candidate volume is
@@ -634,7 +696,7 @@ object PipelineOps {
     // parquet-footer I/O it doesn't use, and the pq leg's two stride
     // rules read the count once.
     lazy val nd = T.footerRowCount(s, d, "documents")
-    lazy val stride = math.max(50L, nd / 4096L)
+    lazy val stride = Ivf.stride(nd, 50L, 4096L)
     val cands =
       if (denseLeg == "exact")
         // corpus x queries is the exact leg's hot loop: the codegen
@@ -650,12 +712,8 @@ object PipelineOps {
         // oracle's literal WHERE — is unchanged; at scale the stride
         // stops being a multiple of 10 and without the predicate the
         // held-out query set would leak into the index geometry
-        val cents = emb.filter(
-            col("doc_id") % stride === 0 && col("doc_id") % 10 =!= 7)
-          .select(col("doc_id").as("cid"), col("q").as("cq"), col("nn").as("cn"))
-        val simToCent =
-          expr("long_dot(q, cq)").cast("double") /
-            sqrt(col("nn").cast("double") * col("cn").cast("double"))
+        val cents = Ivf.centroids(emb,
+          col("doc_id") % stride === 0 && col("doc_id") % 10 =!= 7, "doc_id" -> "cid")
         // inverted lists: every corpus doc -> nearest centroid (ids-only
         // exchange; q/nn ride the original frame, not the assignment)
         // the assignment is the index build's O(N·K) term and is
@@ -664,23 +722,16 @@ object PipelineOps {
         // and every warm rep (r16; the bm25Top5/docEmbed precedent:
         // an index is built once per session, not once per consumer)
         val assigned = SharedFrame(
-          corpus.join(broadcast(cents))
-            .withColumn("sim", simToCent)
-            .groupBy(col("doc_id"))
-            .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("list_id")),
+          Ivf.assign(corpus, Seq("doc_id"), cents, Seq("cid"))
+            .select(col("doc_id"), col("cid").as("list_id")),
           "x12_lists", d)
         val listed = corpus.join(assigned, "doc_id")
         // queries probe their 2 nearest lists; a doc lives in exactly
         // ONE list, so (qdoc, doc_id) candidates are already unique
-        val probes = queries.withColumnRenamed("qq", "q")
-          .join(broadcast(cents))
-          .withColumn("sim",
-            expr("long_dot(q, cq)").cast("double") /
-              sqrt(col("qn").cast("double") * col("cn").cast("double")))
-          .withColumn("rk", row_number().over(
-            W.partitionBy(col("qdoc")).orderBy(col("sim").desc, col("cid"))))
-          .filter(col("rk") <= 2)
-          .select(col("qdoc"), col("q").as("qq"), col("qn"),
+        val probes = Ivf.probe(
+            queries.select(col("qdoc"), col("qq").as("q"), col("qn").as("nn")),
+            Seq("qdoc"), cents, Seq("cid"), 2)
+          .select(col("qdoc"), col("q").as("qq"), col("nn").as("qn"),
             col("cid").as("probe_list"))
         listed.join(probes, col("list_id") === col("probe_list"))
           .drop("list_id", "probe_list")
@@ -694,10 +745,7 @@ object PipelineOps {
         // subspace views: (doc_id, b, s) with s = dims [b*4+1, b*4+4]
         // of the 16-dim hashed embedding — m = 4 subspaces of 4 dims,
         // d16's geometry scaled to this embedding width
-        val subs = emb.select(col("doc_id"),
-          posexplode(expr(
-            "transform(sequence(0, 3), b -> slice(q, b * 4 + 1, 4))"))
-            .as(Seq("b", "s")))
+        val subs = emb.select(col("doc_id"), Ivf.subspaces("q", 4, 4).as(Seq("b", "s")))
         // codebooks: stride-sampled subvectors, but with the PQ-specific
         // cap of ≤ 256 codewords per subspace (8-bit codes — Jégou et
         // al.'s k* = 256, every production PQ deployment's geometry).
@@ -710,32 +758,24 @@ object PipelineOps {
         // every test-SF result — and the DuckDB oracle's literal 50 —
         // is unchanged; the cap only bites at the corpus sizes where
         // the encode term matters.
-        val pqStride = math.max(stride, nd / 256L)
+        val pqStride = Ivf.stride(nd, 50L, 256L)
         // same query-doc exclusion as the coarse sample above: a no-op
         // below the PQ oracle window (stride 50 ⇒ % 10 = 0), a
         // train/query leak-stopper past it
-        val pqCents = subs.filter(
-            col("doc_id") % pqStride === 0 && col("doc_id") % 10 =!= 7)
-          .select(col("b"), col("doc_id").as("pcid"), col("s").as("cs"))
-        val sqDist = expr(
-          "long_sqdist(s, cs)")
+        val pqCents = Ivf.codebook(subs, "doc_id",
+          col("doc_id") % pqStride === 0 && col("doc_id") % 10 =!= 7)
         // encode the corpus: nearest subspace centroid per (doc, b) —
         // O(N·K) with a broadcast codebook, the one-time index build
-        val codes = subs.filter(col("doc_id") % 10 =!= 7)
-          .join(broadcast(pqCents), Seq("b"))
-          .withColumn("dist", sqDist)
-          .groupBy(col("doc_id"), col("b"))
-          .agg(min_by(col("pcid"), struct(col("dist"), col("pcid"))).as("pcid"))
+        val codes = Ivf.encode(subs.filter(col("doc_id") % 10 =!= 7), "doc_id", pqCents)
         // per-query ADC table: distance to every codebook entry. NOT
         // broadcast-hinted: x12's query side is Nd/10 (scales with the
         // corpus), so the table is (Nd/10)·K·4 rows — the scoring join
         // below is equi-keyed on (qdoc, b, pcid) and shuffles fine;
         // Spark still auto-broadcasts it under the size threshold
-        val adcTab = subs.filter(col("doc_id") % 10 === 7)
-          .select(col("doc_id").as("qdoc"), col("b"), col("s"))
-          .join(broadcast(pqCents), Seq("b"))
-          .withColumn("qdist", sqDist)
-          .select(col("qdoc"), col("b"), col("pcid"), col("qdist"))
+        val adcTab = Ivf.distances(
+          subs.filter(col("doc_id") % 10 === 7)
+            .select(col("doc_id").as("qdoc"), col("b"), col("s")),
+          "qdoc", pqCents)
         // ADC distance = Σ over subspaces of the table entry for the
         // candidate's code; negate so the shared TopK (largest-first)
         // ranks by (adist ASC, doc_id ASC). Int64-exact; the double
@@ -1188,18 +1228,10 @@ object PipelineOps {
     // so oracles written against the builtin form are unaffected)
     graft.functions.GraftExtensions.registerInto(base.sparkSession)
     require(maxCluster > 0, s"maxCluster must be positive, got $maxCluster")
-    val cents = base.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cid"), col("q").as("cq"), col("nn").as("cn"))
-    val simToCent =
-      expr("long_dot(q, cq)")
-        .cast("double") / sqrt(col("nn").cast("double") * col("cn").cast("double"))
-    val assigned0 = base.join(broadcast(cents))
-      .withColumn("sim", simToCent)
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("cid"), col("sim")),
-        struct(col("sim"), -col("cid"))).as("b"))
-      .select(col("vec_id"), col("b.cid").as("list_id"),
-        floor(col("b.sim") * lit(1000000) + lit(0.5)).cast("long").as("cqc"))
+    val cents = Ivf.centroids(base, col("vec_id") % stride === 0, "vec_id" -> "cid")
+    val assigned0 = Ivf.assign(base, Seq("vec_id"), cents, Seq("cid"))
+      .select(col("vec_id"), col("cid").as("list_id"),
+        floor(col("sim") * lit(1000000) + lit(0.5)).cast("long").as("cqc"))
     // Oversized-cluster guard: stride-sampled centroids carry no balance
     // promise, and ONE mega-cluster makes the pair scan quadratic in its
     // size (the LSH-bucket failure mode in embedding space). With a
@@ -1943,49 +1975,10 @@ object PipelineOps {
       "d7_ann_ivf",
       (s0, d) => {
         val s = graft.functions.TopK.sessionWithHashAggCapacity(s0) // see TopK doc
-        graft.functions.GraftExtensions.registerInto(s)
-        val q = expr("transform(embedding, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))")
-        // four consumers (centroids, assignment, listing, probes) with
-        // different prunings re-derive the quantized frame — lazy persist
-        // shares one pass (tiny: |vectors| × dim longs; the cache
-        // contract documented in Analyses.positioned)
-        val base = SharedFrame(
-          T.embeddings(s, d).select(col("vec_id"), q.as("q"))
-            .withColumn("nn",
-              expr("long_dot(q, q)")),
-          "d7_base", d)
-        // centroid count must be CAPPED, not a fixed fraction: vec_id % 50
-        // grows the broadcast and the O(N·K) assignment linearly with N.
-        // Real IVF uses fixed K; the stride widens (footer count, zero
-        // jobs — d4's dispatch pattern) so K ≈ min(N/50, 4096). At the
-        // test scales N/4096 < 50, so the selection is unchanged there.
-        val stride = math.max(50L,
-          T.footerRowCount(s, d, "embeddings") / 4096L)
-        val cents = base.filter(col("vec_id") % stride === 0)
-          .select(col("vec_id").as("cid"), col("q").as("cq"), col("nn").as("cn"))
-        val simToCent =
-          expr("long_dot(q, cq)")
-            .cast("double") / sqrt(col("nn").cast("double") * col("cn").cast("double"))
-        // inverted lists: every vector -> nearest centroid. The O(N·K)
-        // assignment is the index build — shared (r16) across d7, x14 and
-        // x15, whose plans are canonically identical (same base cache,
-        // same stride rule, same tiebreak), and across warm reps: an IVF
-        // index is built once per session, not once per consumer
-        val assigned = SharedFrame(
-          base.join(broadcast(cents))
-            .withColumn("sim", simToCent)
-            .groupBy(col("vec_id"))
-            .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("list_id")),
-          "d7_lists", d)
-        val listed = base.join(assigned, "vec_id")
-        // queries probe their 2 nearest lists
-        val probes = base.filter(col("vec_id") < 10).join(broadcast(cents))
-          .withColumn("sim", simToCent)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cid"))))
-          .filter(col("rk") <= 2)
-          .select(col("vec_id").as("qid"), col("q").as("qq"), col("nn").as("qn"),
-            col("cid").as("probe_list"))
+        // inverted lists: every vector -> nearest centroid; queries probe
+        // their 2 nearest lists
+        val (base, lists, probes) = d7Index(s, d)
+        val listed = base.join(lists, "vec_id")
         val cand = probes.join(listed,
           col("list_id") === col("probe_list") && col("vec_id") =!= col("qid"))
         cand
@@ -2003,8 +1996,8 @@ object PipelineOps {
           .orderBy(col("qid"), col("rk"))
       },
       // Full index re-derivation in DuckDB: centroid selection, nearest-
-      // list assignment (row_number over (sim DESC, cid ASC) = Spark's
-      // max_by(cid, struct(sim, -cid)) tiebreak), 2-probe and the top-5
+      // list assignment (row_number over (sim DESC, cid ASC) = the
+      // Ivf.assign tiebreak), 2-probe and the top-5
       // are all exact BIGINT dots / identical-double cosines. The stride
       // is the literal 50: footerRowCount/4096 < 50 at every test SF
       // (the cap only widens beyond ~205k vectors). Recall/determinism
@@ -4277,16 +4270,7 @@ object PipelineOps {
     QueryDef(
       "d13_semdedup",
       (s, d) => {
-        graft.functions.GraftExtensions.registerInto(s)
-        val q = expr("transform(embedding, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))")
-        val base = SharedFrame(
-          T.embeddings(s, d).select(col("vec_id"), q.as("q"))
-            .withColumn("nn",
-              expr("long_dot(q, q)")),
-          "d7_base", d)
-        val stride = math.max(50L,
-          T.footerRowCount(s, d, "embeddings") / 4096L)
-        semDedup(base, stride, 0.3, "d13_members", d)
+        semDedup(Ivf.base(s, d), d7Stride(s, d), 0.3, "d13_members", d)
           .select(col("vec_id"), col("list_id"),
             (col("cqc").cast("double") / lit(1000000)).as("cos_centroid"))
           .orderBy(col("vec_id"))
@@ -4478,15 +4462,8 @@ object PipelineOps {
     QueryDef(
       "x10_embedding_curation",
       (s, d) => {
-        graft.functions.GraftExtensions.registerInto(s)
-        val q = expr("transform(embedding, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))")
-        val base = SharedFrame(
-          T.embeddings(s, d).select(col("vec_id"), q.as("q"))
-            .withColumn("nn",
-              expr("long_dot(q, q)")),
-          "d7_base", d)
-        val stride = math.max(50L,
-          T.footerRowCount(s, d, "embeddings") / 4096L)
+        val base = Ivf.base(s, d)
+        val stride = d7Stride(s, d)
         val surv = semDedup(base, stride, 0.3, "d13_members", d)
         val labeled = T.embeddings(s, d).select(col("vec_id"), col("label"))
         val nBefore = labeled.groupBy(col("label"))
@@ -4763,43 +4740,26 @@ object PipelineOps {
         val base = SharedFrame(chunked, "x11_chunks", d)
         val corpus = base.filter(col("doc_id") % 10 =!= 7)
         val queries = base.filter(col("doc_id") % 10 === 7 && col("chunk_idx") === 0)
-          .select(col("doc_id").as("qdoc"), col("q").as("qq"), col("nn").as("qn"))
+          .select(col("doc_id").as("qdoc"), col("q"), col("nn"))
         // K capped exactly like d7: the stride widens beyond the test
         // SFs (footer/2048 < 25 there, so the oracle's literal 25 holds)
-        val stride = math.max(25L, T.footerRowCount(s, d, "documents") / 2048L)
-        val cents = corpus
-          .filter((col("doc_id") * 31 + col("chunk_idx")) % stride === 0)
-          .select(col("doc_id").as("c_doc"), col("chunk_idx").as("c_chunk"),
-            col("q").as("cq"), col("nn").as("cn"))
-        // the N x K assignment is the query's hot loop: long_dot (the
-        // codegen kernel, identical BIGINT arithmetic to the builtin
-        // fold -- d13's proof) instead of the interpreted HOF chain
-        val simToCent =
-          expr("long_dot(q, cq)")
-            .cast("double") / sqrt(col("nn").cast("double") * col("cn").cast("double"))
+        val stride = Ivf.stride(T.footerRowCount(s, d, "documents"), 25L, 2048L)
+        val cents = Ivf.centroids(corpus,
+          (col("doc_id") * 31 + col("chunk_idx")) % stride === 0,
+          "doc_id" -> "c_doc", "chunk_idx" -> "c_chunk")
+        val listKey = Seq("c_doc", "c_chunk")
         // the N×K assignment is the chunk index's build cost — shared
         // across warm reps (r16, d7_lists' precedent at chunk grain)
         val assigned = SharedFrame(
-          corpus.join(broadcast(cents))
-            .withColumn("sim", simToCent)
-            .groupBy(col("doc_id"), col("chunk_idx"))
-            .agg(max_by(struct(col("c_doc"), col("c_chunk")),
-              struct(col("sim"), -col("c_doc"), -col("c_chunk"))).as("lst"))
+          Ivf.assign(corpus, Seq("doc_id", "chunk_idx"), cents, listKey)
             .select(col("doc_id"), col("chunk_idx"),
-              col("lst.c_doc").as("l_doc"), col("lst.c_chunk").as("l_chunk")),
+              col("c_doc").as("l_doc"), col("c_chunk").as("l_chunk")),
           "x11_lists", d)
         val listed = base.join(assigned, Seq("doc_id", "chunk_idx"))
-        val qSimToCent =
-          expr("long_dot(qq, cq)")
-            .cast("double") / sqrt(col("qn").cast("double") * col("cn").cast("double"))
-        val probes = queries.join(broadcast(cents))
-          .withColumn("sim", qSimToCent)
-          .groupBy(col("qdoc"))
-          .agg(max_by(struct(col("c_doc"), col("c_chunk")),
-            struct(col("sim"), -col("c_doc"), -col("c_chunk"))).as("lst"),
-            first(col("qq")).as("qq"), first(col("qn")).as("qn"))
-          .select(col("qdoc"), col("qq"), col("qn"),
-            col("lst.c_doc").as("l_doc"), col("lst.c_chunk").as("l_chunk"))
+        // nprobe = 1: each query's nearest list
+        val probes = Ivf.probe(queries, Seq("qdoc"), cents, listKey, 1)
+          .select(col("qdoc"), col("q").as("qq"), col("nn").as("qn"),
+            col("c_doc").as("l_doc"), col("c_chunk").as("l_chunk"))
         probes.join(listed, Seq("l_doc", "l_chunk"))
           .withColumn("dot", expr("long_dot(q, qq)"))
           .withColumn("cos",
@@ -5152,51 +5112,21 @@ object PipelineOps {
     QueryDef(
       "d16_pq_adc",
       (s, d) => {
-        graft.functions.GraftExtensions.registerInto(s)
-        val base = SharedFrame(
-          T.embeddings(s, d).select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))")
-              .as("q"))
-            .withColumn("nn",
-              expr("long_dot(q, q)")),
-          "d7_base", d)
-        // PQ codebook cap (r14, the x12e rule applied family-wide):
-        // ≤ 256 codewords per subspace — 8-bit-code geometry (Jégou et
-        // al.'s k*) — because the encode join is O(N·K) per subspace
-        // and a footer-scaled K is a scale term, not accuracy (an
-        // 8-bit code cannot address more than 256 entries anyway).
-        // Below 12,800 vectors (footer/256 < 50) this floors at the
-        // same stride 50 the DuckDB oracle hardcodes, so every test-SF
-        // result is unchanged.
-        val pqStride = math.max(50L,
-          T.footerRowCount(s, d, "embeddings") / 256L)
         // subspace explode: (vec_id, b, s) with s = dims [b*8+1, b*8+8]
-        val subs = base.select(col("vec_id"),
-          posexplode(expr(
-            "transform(sequence(0, 3), b -> slice(q, b * 8 + 1, 8))"))
-            .as(Seq("b", "s")))
-        val cents = subs.filter(col("vec_id") % pqStride === 0)
-          .select(col("b"), col("vec_id").as("cid"), col("s").as("cs"))
-        val sqDist =
-          expr("long_sqdist(s, cs)")
+        val subs = Ivf.base(s, d)
+          .select(col("vec_id"), Ivf.subspaces("q", 4, 8).as(Seq("b", "s")))
+        val book = Ivf.codebook(subs, "vec_id", col("vec_id") % d16Stride(s, d) === 0)
         // encode: nearest subspace centroid per (vector, subspace) —
         // the O(N·K)-per-subspace index build, shared across warm reps
         // (r16; d16's corpus excludes the query vectors, so this entry
         // is distinct from x15's full-corpus codes)
         val codes = SharedFrame(
-          subs.filter(col("vec_id") >= 10)
-            .join(broadcast(cents), Seq("b"))
-            .withColumn("dist", sqDist)
-            .groupBy(col("vec_id"), col("b"))
-            .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cid")),
-          "d16_codes", d)
+          Ivf.encode(subs.filter(col("vec_id") >= 10), "vec_id", book), "d16_codes", d)
         // per-query ADC lookup table: distance to every codebook entry
-        val adc = subs.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("b"), col("s"))
-          .join(broadcast(cents), Seq("b"))
-          .withColumn("qdist", sqDist)
-          .select(col("qid"), col("b"), col("cid"), col("qdist"))
-        codes.join(broadcast(adc), Seq("b", "cid"))
+        val adc = Ivf.distances(
+          subs.filter(col("vec_id") < 10).select(col("vec_id").as("qid"), col("b"), col("s")),
+          "qid", book)
+        codes.join(broadcast(adc), Seq("b", "pcid"))
           .groupBy(col("qid"), col("vec_id"))
           .agg(sum(col("qdist")).as("adist"))
           .withColumn("rk", row_number().over(
@@ -6079,68 +6009,18 @@ object PipelineOps {
       "x14_ann_recall",
       (s0, d) => {
         val s = graft.functions.TopK.sessionWithHashAggCapacity(s0) // see TopK doc
-        graft.functions.GraftExtensions.registerInto(s)
-        val q = expr("transform(embedding, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))")
-        val base = SharedFrame(
-          T.embeddings(s, d).select(col("vec_id"), q.as("q"))
-            .withColumn("nn",
-              expr("long_dot(q, q)")),
-          "d7_base", d)
-        val queries = base.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("q").as("qq"), col("nn").as("qn"))
-        val dot =
-          expr("long_dot(q, qq)")
-            .cast("double")
-        // exact leg: d5's brute-force top-5 — the N×Q ground-truth scan,
-        // shared (r16) with x15 (identical plan: same base cache, same
-        // query set, same tiebreak) and across warm reps
-        val gt = SharedFrame(
-          base.join(broadcast(queries), col("vec_id") =!= col("qid"))
-            .withColumn("cos",
-              dot / sqrt(col("qn").cast("double") * col("nn").cast("double")))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
-            .filter(col("rk") <= 5)
-            .select(col("qid"), col("vec_id").as("eid")),
-          "ann_gt_top5", d)
-        // IVF leg: d7's index, end to end — the assignment rides d7's
-        // shared entry (canonically the same plan)
-        val stride = math.max(50L,
-          T.footerRowCount(s, d, "embeddings") / 4096L)
-        val cents = base.filter(col("vec_id") % stride === 0)
-          .select(col("vec_id").as("cid"), col("q").as("cq"), col("nn").as("cn"))
-        val simToCent =
-          expr("long_dot(q, cq)")
-            .cast("double") / sqrt(col("nn").cast("double") * col("cn").cast("double"))
-        val assigned = SharedFrame(
-          base.join(broadcast(cents))
-            .withColumn("sim", simToCent)
-            .groupBy(col("vec_id"))
-            .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("list_id")),
-          "d7_lists", d)
-        val listed = base.join(assigned, "vec_id")
-        val probes = base.filter(col("vec_id") < 10).join(broadcast(cents))
-          .withColumn("sim", simToCent)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cid"))))
-          .filter(col("rk") <= 2)
-          .select(col("vec_id").as("qid"), col("q").as("qq"), col("nn").as("qn"),
-            col("cid").as("probe_list"))
-        val approx = probes.join(listed,
+        // IVF leg: d7's index end to end, on d7's shared entries
+        val (base, lists, probes) = d7Index(s, d)
+        val approx = probes.join(base.join(lists, "vec_id"),
             col("list_id") === col("probe_list") && col("vec_id") =!= col("qid"))
           .withColumn("cos",
-            dot / sqrt(col("qn").cast("double") * col("nn").cast("double")))
+            expr("long_dot(q, qq)").cast("double") /
+              sqrt(col("qn").cast("double") * col("nn").cast("double")))
           .dropDuplicates("qid", "vec_id")
           .groupBy(col("qid"))
           .agg(graft.functions.TopK.udaf(5)(col("cos"), col("vec_id")).as("top"))
           .select(col("qid"), explode(expr("transform(top, t -> t._2)")).as("eid"))
-        gt.join(approx, Seq("qid", "eid"), "left_semi")
-          .groupBy(col("qid")).agg(count(lit(1)).as("n_hit"))
-          .join(gt.select(col("qid")).distinct(), Seq("qid"), "right")
-          .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-          .withColumn("recall", col("n_hit").cast("double") / 5.0)
-          .select(col("qid"), col("n_hit"), col("recall"))
-          .orderBy(col("qid"))
+        annRecall(base, approx, d)
       },
       Some("""WITH base AS (
              |  SELECT vec_id,
@@ -6219,86 +6099,25 @@ object PipelineOps {
     QueryDef(
       "x15_ivf_pq",
       (s, d) => {
-        graft.functions.GraftExtensions.registerInto(s)
-        val q = expr("transform(embedding, x -> CAST(floor(x * 1000 + 0.5) AS BIGINT))")
-        val base = SharedFrame(
-          T.embeddings(s, d).select(col("vec_id"), q.as("q"))
-            .withColumn("nn",
-              expr("long_dot(q, q)")),
-          "d7_base", d)
-        val queries = base.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("q").as("qq"), col("nn").as("qn"))
-        val dot =
-          expr("long_dot(q, qq)")
-            .cast("double")
-        // exact ground truth (x14's leg, SAME shared entry — the plans
-        // are canonically identical, so one N×Q scan serves both
-        // self-evaluations and every warm rep)
-        val gt = SharedFrame(
-          base.join(broadcast(queries), col("vec_id") =!= col("qid"))
-            .withColumn("cos",
-              dot / sqrt(col("qn").cast("double") * col("nn").cast("double")))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
-            .filter(col("rk") <= 5)
-            .select(col("qid"), col("vec_id").as("eid")),
-          "ann_gt_top5", d)
-        // IVF stage (d7's index): lists + 2-probe candidate generation;
-        // the assignment rides d7's shared entry
-        val stride = math.max(50L,
-          T.footerRowCount(s, d, "embeddings") / 4096L)
-        val cents = base.filter(col("vec_id") % stride === 0)
-          .select(col("vec_id").as("cid"), col("q").as("cq"), col("nn").as("cn"))
-        val simToCent =
-          expr("long_dot(q, cq)")
-            .cast("double") / sqrt(col("nn").cast("double") * col("cn").cast("double"))
-        val assigned = SharedFrame(
-          base.join(broadcast(cents))
-            .withColumn("sim", simToCent)
-            .groupBy(col("vec_id"))
-            .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("list_id")),
-          "d7_lists", d)
-        val probes = base.filter(col("vec_id") < 10).join(broadcast(cents))
-          .withColumn("sim", simToCent)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cid"))))
-          .filter(col("rk") <= 2)
-          .select(col("vec_id").as("qid"), col("cid").as("probe_list"))
-        val cand = probes.join(assigned,
+        // IVF stage (d7's index): lists + 2-probe candidate generation,
+        // on d7's shared entries
+        val (base, lists, probes) = d7Index(s, d)
+        val cand = probes.select(col("qid"), col("probe_list")).join(lists,
             col("list_id") === col("probe_list") && col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id"))
-        // PQ stage (d16's index): subspace codebooks, codes for the whole
-        // corpus, per-query ADC tables. Codebooks cap at ≤ 256
-        // codewords/subspace (r14, the family-wide 8-bit-code rule —
-        // the encode join below is O(N·K) per subspace; see d16): below
-        // 12,800 vectors this floors at the oracle's stride 50, so
-        // every test-SF result is unchanged, while the 30× corpus
-        // (60k vecs) encodes against 256 codewords instead of 1,200.
-        val pqStride = math.max(stride,
-          T.footerRowCount(s, d, "embeddings") / 256L)
-        val subs = base.select(col("vec_id"),
-          posexplode(expr(
-            "transform(sequence(0, 3), b -> slice(q, b * 8 + 1, 8))"))
-            .as(Seq("b", "s")))
-        val pqCents = subs.filter(col("vec_id") % pqStride === 0)
-          .select(col("b"), col("vec_id").as("pcid"), col("s").as("cs"))
-        val sqDist =
-          expr("long_sqdist(s, cs)")
+        // PQ stage (d16's index): subspace codebooks (≤ 256 codewords,
+        // d16Stride; the 30× corpus of 60k vecs encodes against 256
+        // instead of 1,200), codes for the whole corpus, per-query ADC
+        // tables
+        val subs = base.select(col("vec_id"), Ivf.subspaces("q", 4, 8).as(Seq("b", "s")))
+        val book = Ivf.codebook(subs, "vec_id", col("vec_id") % d16Stride(s, d) === 0)
         // the encode join is the PQ index build's O(N·K)-per-subspace
         // term — shared across warm reps (r16): codes are built once per
         // session, exactly like the coarse lists above
-        val codes = SharedFrame(
-          subs
-            .join(broadcast(pqCents), Seq("b"))
-            .withColumn("dist", sqDist)
-            .groupBy(col("vec_id"), col("b"))
-            .agg(min_by(col("pcid"), struct(col("dist"), col("pcid"))).as("pcid")),
-          "x15_codes", d)
-        val adc = subs.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("qid"), col("b"), col("s"))
-          .join(broadcast(pqCents), Seq("b"))
-          .withColumn("qdist", sqDist)
-          .select(col("qid"), col("b"), col("pcid"), col("qdist"))
+        val codes = SharedFrame(Ivf.encode(subs, "vec_id", book), "x15_codes", d)
+        val adc = Ivf.distances(
+          subs.filter(col("vec_id") < 10).select(col("vec_id").as("qid"), col("b"), col("s")),
+          "qid", book)
         // ADC scoring of the IVF candidates + top-5 by asymmetric distance
         val approx = cand.join(codes, "vec_id")
           .join(broadcast(adc), Seq("qid", "b", "pcid"))
@@ -6308,13 +6127,7 @@ object PipelineOps {
             Window.partitionBy(col("qid")).orderBy(col("adist"), col("vec_id"))))
           .filter(col("rk") <= 5)
           .select(col("qid"), col("vec_id").as("eid"))
-        gt.join(approx, Seq("qid", "eid"), "left_semi")
-          .groupBy(col("qid")).agg(count(lit(1)).as("n_hit"))
-          .join(gt.select(col("qid")).distinct(), Seq("qid"), "right")
-          .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
-          .withColumn("recall", col("n_hit").cast("double") / 5.0)
-          .select(col("qid"), col("n_hit"), col("recall"))
-          .orderBy(col("qid"))
+        annRecall(base, approx, d)
       },
       Some("""WITH base AS (
              |  SELECT vec_id,

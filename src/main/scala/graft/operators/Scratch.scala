@@ -101,18 +101,10 @@ object Scratch {
   * interaction (the rebase-on-InMemoryRelation variant measured
   * net-negative twice — see OPTIMIZATION_r16.md). Call sites opt in via
   * `preferScratch = true`; `graft.cache.mode` still overrides globally
-  * in either direction (`scratch` forces all, `persist` forces none),
-  * and the `SPARK_GRAFT_SCRATCH_FRAMES` env var (comma-separated frame
-  * names) is the measurement hook for A/Bing a candidate set without a
-  * recompile.
+  * in either direction (`scratch` forces all, `persist` forces none).
   */
 object SharedFrame {
   private val written = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  private lazy val envFrames: Set[String] =
-    sys.env.get("SPARK_GRAFT_SCRATCH_FRAMES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
 
   def apply(df: org.apache.spark.sql.DataFrame, name: String, key: String): org.apache.spark.sql.DataFrame =
     apply(df, name, key, preferScratch = false)
@@ -123,7 +115,7 @@ object SharedFrame {
     val useScratch = spark.conf.getOption("graft.cache.mode") match {
       case Some("scratch") => true
       case Some("persist") => false
-      case _ => preferScratch || envFrames.contains(name)
+      case _ => preferScratch
     }
     if (useScratch) {
       val tag = java.lang.Long.toHexString(

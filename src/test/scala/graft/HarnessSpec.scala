@@ -27,17 +27,29 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 
-  test("SparkSession.builder appears in the main sources only in Harness.scala") {
+  /** Names of the main-source files whose text matches `pattern`. */
+  private def mainSourcesMatching(pattern: scala.util.matching.Regex): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    val builders = files(root).filter(_.getName.endsWith(".scala")).filter { f =>
+    files(root).filter(_.getName.endsWith(".scala")).filter { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.mkString.contains("SparkSession.builder") finally src.close()
+      try pattern.findFirstIn(src.mkString).isDefined finally src.close()
+    }.map(_.getName).sorted
+  }
+
+  test("SparkSession.builder appears in the main sources only in Harness.scala") {
+    val builders = mainSourcesMatching("SparkSession\\.builder".r)
+    assert(builders == Seq("Harness.scala"), s"session builders outside Harness: $builders")
+  }
+
+  test("the centroid similarity and the nearest-centroid max_by appear only in Ivf.scala") {
+    Seq("""long_dot\(q, cq\)""".r,
+        """(?s)max_by\((?:(?!max_by\().){0,200}?struct\(col\("sim"\)""".r,
+        """long_sqdist\(s, cs\)""".r).foreach { p =>
+      assert(mainSourcesMatching(p) == Seq("Ivf.scala"), s"copies of /$p/")
     }
-    assert(builders.map(_.getName) == Seq("Harness.scala"),
-      s"session builders outside Harness: ${builders.mkString(", ")}")
   }
 
   test("Probe parses its flags and rejects unknown ones") {
