@@ -113,7 +113,8 @@ object CorpusRehearsal {
         .as("q"))
 
   /** Runs the staged funnel against a materialized corpus; returns
-    * (per-stage seconds, analysis counts as Locale-ROOT numeric strings).
+    * ((stage, wall, process CPU, executor CPU seconds) per stage
+    * ([[Probe.StageTimer]]), analysis counts as Locale-ROOT numeric strings).
     *
     * Stage ORDER is load-bearing: exact dedup runs BEFORE minhash (x6's
     * ordering), so a mega-duplicate (`hotCopies`) collapses to one
@@ -125,30 +126,10 @@ object CorpusRehearsal {
     * survive mega-dups without the dedup prefix and which don't.
     */
   def run(spark: SparkSession, nDocs: Long, dir: String, hotCopies: Long = 1)
-      : (Seq[(String, Double)], Seq[(String, String)]) = {
+      : (Seq[(String, Double, Double, Double)], Seq[(String, String)]) = {
     graft.functions.GraftExtensions.registerInto(spark)
-    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    val stage = new Probe.StageTimer(spark)
     val stats = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    // SPARK_GRAFT_REHEARSAL_DIAG=1: the top Spark stages of every
-    // rehearsal stage by wall-clock, with shuffle and spill bytes
-    // (Probe.withStages). Diagnostic only; the recorded stage timings
-    // exclude the listener's settling wait.
-    val diag = sys.env.get("SPARK_GRAFT_REHEARSAL_DIAG").contains("1")
-    def stage[A](name: String)(body: => A): A = {
-      def timed(): A = {
-        val t0 = System.nanoTime()
-        val r = body
-        timings += name -> (System.nanoTime() - t0) / 1e9
-        r
-      }
-      if (!diag) timed()
-      else {
-        val (r, stages) = Probe.withStages(spark)(timed())
-        Raw.stdout.println(f"== diag $name: ${timings.last._2}%.1f s")
-        Probe.stageTable(stages, 8).foreach(Raw.stdout.println)
-        r
-      }
-    }
     def put(k: String, v: Long): Unit = stats += k -> v.toString
     // the benchmark suite never contains the boilerplate clone block
     def isEval = col("doc_id") % 200 === 7 && col("doc_id") >= hotCopies
@@ -963,27 +944,24 @@ object CorpusRehearsal {
       put("ivfpq_gt_noise_cos_milli", math.round(r.getDouble(5) * 1000))
     }
 
-    (timings.toSeq, stats.toSeq)
+    (stage.timings, stats.toSeq)
   }
 
   def main(args: Array[String]): Unit = {
-    val nDocs = args.headOption
-      .orElse(sys.env.get("SPARK_GRAFT_CORPUS_DOCS")).getOrElse("500000").toLong
-    // second arg / env: mega-duplicate size (docs [0, hotCopies) all
-    // carry doc 0's text — the boilerplate-page model)
-    val hotCopies = args.drop(1).headOption
-      .orElse(sys.env.get("SPARK_GRAFT_CORPUS_HOT")).getOrElse("1").toLong
+    val nDocs = args.headOption.getOrElse("500000").toLong
+    // second arg: mega-duplicate size (docs [0, hotCopies) all carry
+    // doc 0's text — the boilerplate-page model)
+    val hotCopies = args.drop(1).headOption.getOrElse("1").toLong
     val spark = Harness.session(32)
     val dir = java.nio.file.Files.createTempDirectory("graft_corpus").toString
     try {
       val (timings, stats) = run(spark, nDocs, dir, hotCopies)
       val total = timings.map(_._2).sum
       def f(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-      val stages = timings.map { case (k, v) => s""""$k":${f(v)}""" }.mkString(",")
       val analysis = stats.map { case (k, v) => s""""$k":$v""" }.mkString(",")
       val line = s"""{"metric":"corpus_rehearsal_total","value":${f(total)},""" +
         s""""unit":"sec","n_docs":$nDocs,"hot_copies":$hotCopies,""" +
-        s""""stages":{$stages},"analysis":{$analysis}}"""
+        s"""${Probe.stagesJson(timings)},"analysis":{$analysis}}"""
       Raw.stdout.println(line)
       val out = if (hotCopies > 1) "corpus_rehearsal_out_hot.json"
         else "corpus_rehearsal_out.json"

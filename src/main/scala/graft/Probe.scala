@@ -147,6 +147,46 @@ object Probe {
     } finally sc.removeSparkListener(listener)
   }
 
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  /** The rehearsals' per-stage timer: `timer(name) { body }` records
+    * (name, wall seconds, process CPU seconds, executor CPU seconds).
+    * Process CPU counts every thread of the JVM (executors, JIT,
+    * collector), so a stage that reads slower in wall but not in CPU
+    * waited on the host, not on the program. Executor CPU is the CPU time
+    * of the stage's Spark tasks ([[withStages]]); the rest of its process
+    * CPU went to the driver, the JIT and the collector. The listener's
+    * settling wait falls outside the timed region.
+    */
+  final class StageTimer(spark: SparkSession) {
+    private val recorded =
+      scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Double)]
+    def timings: Seq[(String, Double, Double, Double)] = recorded.toSeq
+
+    def apply[A](name: String)(body: => A): A = {
+      val ((r, wallS, cpuS), stages) = withStages(spark) {
+        val t0 = System.nanoTime()
+        val c0 = osBean.getProcessCpuTime
+        val r = body
+        (r, (System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
+      }
+      recorded += ((name, wallS, cpuS, stages.map(_.cpuS).sum))
+      r
+    }
+  }
+
+  /** The `"stages"`, `"stages_cpu"` and `"stages_exec_cpu"` JSON members
+    * of a [[StageTimer]]'s timings, in seconds to one decimal.
+    */
+  def stagesJson(timings: Seq[(String, Double, Double, Double)]): String = {
+    def f(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+    def block(key: String, v: ((String, Double, Double, Double)) => Double) =
+      s""""$key":{${timings.map(t => s""""${t._1}":${f(v(t))}""").mkString(",")}}"""
+    Seq(block("stages", _._2), block("stages_cpu", _._3),
+      block("stages_exec_cpu", _._4)).mkString(",")
+  }
+
   /** The `top` stages by wall time, one line each. */
   def stageTable(stages: Seq[Stage], top: Int): Seq[String] =
     stages.sortBy(-_.wallS).take(top).map { s =>

@@ -140,16 +140,9 @@ object Rehearsal {
     Pangenome.EtlTables(features, clusters, neighbourEdges)
   }
 
-  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-
   /** Run the lifecycle against `dir`; returns ((stage, wall seconds, process
-    * CPU seconds, executor CPU seconds) per stage, rgp rows, analysis
-    * stats). Process CPU counts every thread of the JVM (executors, JIT,
-    * collector), so a stage that reads slower in wall but not in CPU waited
-    * on the host, not on the program. Executor CPU is the CPU time of the
-    * stage's Spark tasks ([[Probe.withStages]]); the rest of its process
-    * CPU went to the driver, the JIT and the collector. The stats block
+    * CPU seconds, executor CPU seconds) per stage ([[Probe.StageTimer]]),
+    * rgp rows, analysis stats). The stats block
     * mirrors BASELINE.md's notebook-golden table (RGPs.ipynb cells
     * 12/25/35/38/54/67/89-91) so each round's
     * rehearsal reports the same cardinalities the reference recorded at
@@ -158,18 +151,7 @@ object Rehearsal {
     */
   def run(spark: SparkSession, nStrains: Int, dir: String, hotFactor: Int = 1)
       : (Seq[(String, Double, Double, Double)], Long, Seq[(String, String)]) = {
-    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Double)]
-    def stage[A](name: String)(body: => A): A = {
-      // the listener's settling wait falls outside the timed region
-      val ((r, wallS, cpuS), stages) = Probe.withStages(spark) {
-        val t0 = System.nanoTime()
-        val c0 = osBean.getProcessCpuTime
-        val r = body
-        (r, (System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
-      }
-      timings += ((name, wallS, cpuS, stages.map(_.cpuS).sum))
-      r
-    }
+    val stage = new Probe.StageTimer(spark)
 
     // ETL-equivalent: materialize the source tables (the reference's CSV
     // load step); downstream stages read from disk like the real boundary
@@ -279,7 +261,7 @@ object Rehearsal {
       stats += "top_group_mean_dist" -> fmt(r.getDouble(2))
       stats += "top_group_max_dist" -> fmt(r.getDouble(3))
     }
-    (timings.toSeq, nRgps, stats.toSeq)
+    (stage.timings, nRgps, stats.toSeq)
   }
 
   /** Balanced binary Newick over S000..S(n-1), unit branch lengths —
@@ -293,28 +275,16 @@ object Rehearsal {
   }
 
   def main(args: Array[String]): Unit = {
-    val nStrains = args.headOption
-      .orElse(sys.env.get("SPARK_GRAFT_REHEARSAL_STRAINS")).getOrElse("770").toInt
-    // second arg / env: hot-strain factor (strain 0 gets hotFactor×6500
+    val nStrains = args.headOption.getOrElse("770").toInt
+    // second arg: hot-strain factor (strain 0 gets hotFactor×6500
     // features — 86 ≈ 10% of the corpus on one strain at 770 strains)
-    val hotFactor = args.drop(1).headOption
-      .orElse(sys.env.get("SPARK_GRAFT_REHEARSAL_HOT")).getOrElse("1").toInt
+    val hotFactor = args.drop(1).headOption.getOrElse("1").toInt
     val spark = Harness.session(32)
-    // optional: route the lifecycle's per-strain windows through the Skew
-    // two-phase plans (bit-identical output, SkewLifecycleSpec) — lets a
-    // hot-factor run exercise the mitigation at matched scale
-    sys.env.get("SPARK_GRAFT_SKEW_TRACK")
-      .foreach(v => spark.conf.set("graft.skew.trackChunkSpan", v))
-    sys.env.get("SPARK_GRAFT_SKEW_CHAIN")
-      .foreach(v => spark.conf.set("graft.skew.chainChunkSpan", v))
     val dir = java.nio.file.Files.createTempDirectory("graft_rehearsal").toString
     try {
       val (timings, nRgps, stats) = run(spark, nStrains, dir, hotFactor)
       val total = timings.map(_._2).sum
       def f(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-      val stages = timings.map { case (k, v, _, _) => s""""$k":${f(v)}""" }.mkString(",")
-      val stagesCpu = timings.map { case (k, _, c, _) => s""""$k":${f(c)}""" }.mkString(",")
-      val stagesExecCpu = timings.map { case (k, _, _, e) => s""""$k":${f(e)}""" }.mkString(",")
       // stats values are numeric strings built with Locale.ROOT — emit bare
       val analysis = stats.map { case (k, v) => s""""$k":$v""" }.mkString(",")
       // the stored graph's footprint: directories (its root included),
@@ -326,7 +296,7 @@ object Rehearsal {
         s""""mb":${f(graphFiles.map(_.length).sum / 1048576.0)}}"""
       val line = s"""{"metric":"rehearsal_total","value":${f(total)},"unit":"sec",""" +
         s""""n_strains":$nStrains,"hot_factor":$hotFactor,"n_rgps":$nRgps,""" +
-        s""""stages":{$stages},"stages_cpu":{$stagesCpu},"stages_exec_cpu":{$stagesExecCpu},""" +
+        s"""${Probe.stagesJson(timings)},""" +
         s"""$graph,"analysis":{$analysis}}"""
       Raw.stdout.println(line)
       val out = if (hotFactor > 1) "rehearsal_out_hot.json" else "rehearsal_out.json"

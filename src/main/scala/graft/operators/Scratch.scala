@@ -22,34 +22,30 @@ object Scratch {
   private val seq = new java.util.concurrent.atomic.AtomicLong()
   private val issued =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.ArrayDeque[String]]()
+  private val Retain = 2
 
   /** A fresh `prefix`-named subdirectory per call: intra-query
     * materializations must NOT reuse a fixed path — a second invocation's
     * overwrite would yank the files out from under the first invocation's
     * still-lazy returned plan. To keep a long-lived interactive session
     * (N calls to `cluster()`/d8) from accumulating N dirs until JVM exit,
-    * each prefix retains a sliding window of `graft.scratch.retain`
-    * dirs (default 2: current + one predecessor) and best-effort-deletes
-    * anything older — so a scratch-backed result stays readable until two
-    * later invocations of the SAME operator supersede it. Set
-    * `graft.scratch.retain` to 0 (or any non-positive value) to never
-    * reap. Reaping only applies to the local-tmpdir default; an explicit
-    * `graft.scratch.dir` is cluster storage whose lifecycle (quotas, TTL)
-    * is the cluster's business, matching the shutdown-hook policy below.
+    * each prefix retains a sliding window of `Retain` = 2 dirs (current +
+    * one predecessor) and best-effort-deletes anything older — so a
+    * scratch-backed result stays readable until two later invocations of
+    * the SAME operator supersede it. Reaping only applies to the
+    * local-tmpdir default; an explicit `graft.scratch.dir` is cluster
+    * storage whose lifecycle (quotas, TTL) is the cluster's business,
+    * matching the shutdown-hook policy below.
     */
   def uniqueDir(spark: SparkSession, prefix: String): String = {
     val d = s"${dir(spark)}/${prefix}_${seq.incrementAndGet()}"
     if (spark.conf.getOption("graft.scratch.dir").isEmpty) {
-      val retain = spark.conf.getOption("graft.scratch.retain")
-        .map(_.toInt).getOrElse(2)
-      if (retain > 0) {
-        val q = issued.computeIfAbsent(
-          s"${spark.sparkContext.applicationId}:$prefix",
-          _ => new java.util.ArrayDeque[String]())
-        q.synchronized {
-          q.addLast(d)
-          while (q.size > retain) deleteRecursively(new java.io.File(q.removeFirst()))
-        }
+      val q = issued.computeIfAbsent(
+        s"${spark.sparkContext.applicationId}:$prefix",
+        _ => new java.util.ArrayDeque[String]())
+      q.synchronized {
+        q.addLast(d)
+        while (q.size > Retain) deleteRecursively(new java.io.File(q.removeFirst()))
       }
     }
     d

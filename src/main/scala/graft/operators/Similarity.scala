@@ -95,57 +95,23 @@ object Similarity {
     * degrades smoothly) — a floor that low demands near-quadratic output
     * and belongs to the exact branch.
     */
-  def bandGeometryFor(jaccardFloor: Double, targetRecall: Double = 0.8): (Int, Int) = {
-    require(targetRecall > 0.0 && targetRecall < 1.0,
-      s"targetRecall must be in (0, 1), got $targetRecall")
+  def bandGeometryFor(jaccardFloor: Double): (Int, Int) = {
     val ladder = Seq((32, 8), (32, 4), (32, 2), (64, 2), (128, 2))
     ladder.find { case (p, r) =>
-      1.0 - math.pow(1.0 - math.pow(jaccardFloor, r), p.toDouble / r) >= targetRecall
+      1.0 - math.pow(1.0 - math.pow(jaccardFloor, r), p.toDouble / r) >= 0.8
     }.getOrElse(ladder.last)
   }
 
-  /** Cluster-wide LSH tuning (VERDICT r5 #7): resolve band geometry from
-    * the session conf so an operator can set the recall/cost trade ONCE
-    * per cluster instead of threading knobs through every call site.
-    *
-    *  - `graft.lsh.numPerms` + `graft.lsh.rowsPerBand` — pin an explicit
-    *    geometry (both or neither; rows must divide perms). Beats the
-    *    ladder entirely.
-    *  - `graft.lsh.targetRecall` — the per-edge recall bar the
-    *    [[bandGeometryFor]] ladder must clear at the caller's floor
-    *    (default 0.8). Raising it buys recall with more permutations —
-    *    one wider linear signature pass — never with r = 1 bands.
-    *
-    * Every floor-aware LSH entry point resolves through here
+  /** The geometry every floor-aware LSH entry point uses
     * ([[dicePairs]]/[[jaccardPairs]]/[[cluster]]'s distributed branch,
-    * `StreamingJobs.incrementalNearDedup`'s default); callers passing
-    * explicit knobs (e.g. `PipelineOps.minhashSignatures`) bypass the
-    * conf by design — d2's oracle-pinned 32/4 must not drift under a
-    * cluster-wide override.
-    *
-    * A floor of 0 (diagnostic forceLsh use) has nothing for the ladder to
-    * aim at: explicit conf wins if set, else the classic 32/4.
+    * `StreamingJobs.incrementalNearDedup`'s default): the
+    * [[bandGeometryFor]] ladder at the caller's floor. A floor of 0
+    * (diagnostic forceLsh use) has nothing for the ladder to aim at and
+    * keeps the classic 32/4. Callers passing explicit knobs (e.g.
+    * `PipelineOps.minhashSignatures`) bypass it — d2's oracle-pinned 32/4.
     */
-  def geometryFor(spark: org.apache.spark.sql.SparkSession,
-      jaccardFloor: Double): (Int, Int) = {
-    val c = spark.conf
-    val np = c.getOption("graft.lsh.numPerms").map(_.trim.toInt)
-    val rb = c.getOption("graft.lsh.rowsPerBand").map(_.trim.toInt)
-    (np, rb) match {
-      case (Some(p), Some(r)) =>
-        require(p > 0 && r > 0 && p % r == 0,
-          s"graft.lsh.rowsPerBand must divide graft.lsh.numPerms, got ($p, $r)")
-        (p, r)
-      case (None, None) =>
-        val target = c.getOption("graft.lsh.targetRecall")
-          .map(_.trim.toDouble).getOrElse(0.8)
-        require(target > 0.0 && target < 1.0,
-          s"graft.lsh.targetRecall must be in (0, 1), got $target")
-        if (jaccardFloor > 0.0) bandGeometryFor(jaccardFloor, target) else (32, 4)
-      case _ => throw new IllegalArgumentException(
-        "set both graft.lsh.numPerms and graft.lsh.rowsPerBand, or neither")
-    }
-  }
+  def geometryFor(jaccardFloor: Double): (Int, Int) =
+    if (jaccardFloor > 0.0) bandGeometryFor(jaccardFloor) else (32, 4)
 
   private def pairs(
       sets: DataFrame, idCol: String, setCol: String, simCol: String,
@@ -156,10 +122,7 @@ object Similarity {
     val useLsh = forceLsh || (minSim > 0.0 && sets.count() > maxExactRows)
     val cand =
       if (useLsh) {
-        // conf-aware: graft.lsh.* overrides, else the ladder at the floor
-        // (a zero floor — forceLsh with minSim = 0, test/diagnostic use —
-        // gives the tuner nothing to aim at and keeps the classic 32/4)
-        val (p, r) = geometryFor(sets.sparkSession, jaccardFloor)
+        val (p, r) = geometryFor(jaccardFloor)
         lshCandidates(sets, idCol, setCol, numPerms = p, rowsPerBand = r)
       } else allPairs(sets, idCol, setCol)
     cand

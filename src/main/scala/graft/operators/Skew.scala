@@ -143,46 +143,28 @@ object Skew {
     * duplication. The callback's spec arrives framed `(-window, 0)`;
     * re-framing it to any SHORTER trailing reach (`spec.rowsBetween(-j,
     * 0)`, j <= window) is safe — the carries cover the deepest frame —
-    * which lets one pass compute several window widths (genomeTrack's
-    * 10/20/5 family).
+    * which lets one pass compute several window widths.
     */
   def rowsRolling(df: DataFrame, keys: Seq[String], ordCol: Column,
       tieCols: Seq[Column], window: Int, chunkSpan: Long, chunkFactor: Int = 4)(
       aggs: WindowSpec => Seq[(String, Column)]): DataFrame = {
     require(window > 0, s"window must be positive, got $window")
     require(chunkFactor >= 2, s"chunkFactor must be >= 2, got $chunkFactor")
-    val (unioned, spec) =
-      chunkedByRn(df, keys, ordCol, tieCols, window, chunkSpan, chunkFactor)
-    val rolled = aggs(spec.rowsBetween(-window, 0)).foldLeft(unioned) {
+    val withRn = globalRowNumber(df, keys, ordCol, tieCols, chunkSpan, "__rn")
+    val w = window.toLong * chunkFactor
+    val rchunkOf = expr(s"(__rn - 1) div ${w}L")
+    val cur = withRn.withColumn("__rchunk", rchunkOf).withColumn("__carry", lit(false))
+    val carry = withRn
+      .filter(pmod(col("__rn") - 1, lit(w)) >= w - window)
+      .withColumn("__rchunk", rchunkOf + 1)
+      .withColumn("__carry", lit(true))
+    val spec = Window
+      .partitionBy(keys.map(col) :+ col("__rchunk"): _*)
+      .orderBy(col("__rn"))
+    val rolled = aggs(spec.rowsBetween(-window, 0)).foldLeft(cur.unionByName(carry)) {
       case (acc, (name, c)) => acc.withColumn(name, c)
     }
     rolled.filter(!col("__carry")).drop("__rn", "__rchunk", "__carry")
-  }
-
-  /** Skew-safe per-key `lag` — the chain-edge shape (G1/W4: "previous
-    * feature in genome order" per strain) without the per-key window.
-    * Same two-phase machinery as [[rowsRolling]]; the callback receives
-    * an UNFRAMED chunked WindowSpec (lead/lag reject explicit frames)
-    * and must only use `lag(..., k)` with `k <= maxOffset` over it — a
-    * `lead`, or a lag deeper than the carry, would read rows the chunk
-    * does not carry. Result is row-for-row identical to
-    * `lag(...).over(Window.partitionBy(keys).orderBy(ordCol, tieCols…))`
-    * (SkewSpec, including the first-rows-null boundary and sparse keys);
-    * the hot key scatters over nRows/(maxOffset·chunkFactor) tasks.
-    */
-  def chunkedLag(df: DataFrame, keys: Seq[String], ordCol: Column,
-      tieCols: Seq[Column], maxOffset: Int, chunkSpan: Long, chunkFactor: Int = 4)(
-      aggs: WindowSpec => Seq[(String, Column)]): DataFrame = {
-    require(maxOffset > 0, s"maxOffset must be positive, got $maxOffset")
-    // lag wants many rows per carried row, so amortize harder by default:
-    // a chunkFactor of 4 on maxOffset=1 would duplicate 25% of the input
-    val factor = math.max(chunkFactor, 64 / math.max(maxOffset, 1))
-    val (unioned, spec) =
-      chunkedByRn(df, keys, ordCol, tieCols, maxOffset, chunkSpan, factor)
-    val lagged = aggs(spec).foldLeft(unioned) {
-      case (acc, (name, c)) => acc.withColumn(name, c)
-    }
-    lagged.filter(!col("__carry")).drop("__rn", "__rchunk", "__carry")
   }
 
   /** GLOBAL per-key row numbers (dense, 1-based, ordered by `(ordCol,
@@ -226,32 +208,5 @@ object Skew {
       .join(offsets, keys :+ "__chunk")
       .withColumn(out, col("__off") + col("__lrn"))
       .drop("__ord", "__chunk", "__lrn", "__off")
-  }
-
-  /** Shared phase-1 + phase-2 scaffolding: global rn, row-chunks of
-    * `W = window · chunkFactor`, trailing-`window` carries into the next
-    * chunk, and the (key…, __rchunk)-partitioned rn-ordered spec (frame
-    * applied by the caller). The returned frame still carries
-    * `__rn`/`__rchunk`/`__carry`; callers compute their windowed columns
-    * then `filter(!__carry)` and drop the temps.
-    */
-  private def chunkedByRn(df: DataFrame, keys: Seq[String], ordCol: Column,
-      tieCols: Seq[Column], window: Int, chunkSpan: Long, chunkFactor: Int)
-      : (DataFrame, WindowSpec) = {
-    require(window > 0, s"window must be positive, got $window")
-    require(chunkFactor >= 2, s"chunkFactor must be >= 2, got $chunkFactor")
-    val withRn = globalRowNumber(df, keys, ordCol, tieCols, chunkSpan, "__rn")
-    val keyCols = keys.map(col)
-    val w = window.toLong * chunkFactor
-    val rchunkOf = expr(s"(__rn - 1) div ${w}L")
-    val cur = withRn.withColumn("__rchunk", rchunkOf).withColumn("__carry", lit(false))
-    val carry = withRn
-      .filter(pmod(col("__rn") - 1, lit(w)) >= w - window)
-      .withColumn("__rchunk", rchunkOf + 1)
-      .withColumn("__carry", lit(true))
-    val spec = Window
-      .partitionBy(keyCols :+ col("__rchunk"): _*)
-      .orderBy(col("__rn"))
-    (cur.unionByName(carry), spec)
   }
 }

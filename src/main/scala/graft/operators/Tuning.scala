@@ -25,17 +25,15 @@ import org.apache.spark.sql.SparkSession
   * Releasing the floor is posture-neutral at scale: once bytes-per-core
   * exceed 1 MB (any real corpus) the parallelism-first target dominates
   * and the floor never binds; it only decides behavior in the regime
-  * where data-per-core is tiny and only compute can justify tasks. The
-  * floor stays parameterized (`graft.aqe.minPartitionSize`, default
-  * `1b`) so a deployment that prefers Spark's default can set `1m`.
+  * where data-per-core is tiny and only compute can justify tasks, so
+  * the released floor is the constant `1b`.
   */
 object Tuning {
   private val Key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
   /** Scoped clone carrying the released coalescing floor. */
   def computeDense(spark: SparkSession): SparkSession =
-    scoped(spark, Key, spark.conf.getOption("graft.aqe.minPartitionSize")
-      .map(_.trim).filter(_.nonEmpty).getOrElse("1b"))
+    scoped(spark, Key, "1b")
 
   /** A state clone of `spark` (same SparkContext, SharedState and cache;
     * copied runtime confs and temp functions) with `key` set to `value`.

@@ -107,21 +107,9 @@ object Pangenome {
     // chains, never an edge across the replicon boundary (SURVEY §4;
     // the reference's one-chain assumption is the Contig="0" special
     // case). Partitioned lag (the strain-boundary fix per SURVEY G1).
-    // 100 TB posture: `graft.skew.chainChunkSpan` (a Start-coordinate
-    // span) opts the derivation into Skew.chunkedLag — bit-identical
-    // edges (SkewLifecycleSpec) with a pathological mega-genome spread
-    // over span-sized tasks instead of serializing one per-chain window.
-    val lagSource = (w: org.apache.spark.sql.expressions.WindowSpec) =>
-      Seq("sourceFeature" -> lag(col("Name"), 1).over(w))
-    val lagged = skewSpan(features, "graft.skew.chainChunkSpan") match {
-      case Some(span) =>
-        graft.operators.Skew.chunkedLag(features, Seq("Strain", "Contig"),
-          col("Start"), Seq(col("Name")), maxOffset = 1, chunkSpan = span)(lagSource)
-      case None =>
-        val w = Window.partitionBy(col("Strain"), col("Contig"))
-          .orderBy(col("Start"), col("Name"))
-        lagSource(w).foldLeft(features) { case (acc, (n, c)) => acc.withColumn(n, c) }
-    }
+    val w = Window.partitionBy(col("Strain"), col("Contig"))
+      .orderBy(col("Start"), col("Name"))
+    val lagged = features.withColumn("sourceFeature", lag(col("Name"), 1).over(w))
     val neighbourEdges = lagged
       .filter(col("sourceFeature").isNotNull)
       .select(col("sourceFeature"), col("Name").as("receivingFeature"),
@@ -320,15 +308,6 @@ object Pangenome {
   private def withContig(df: DataFrame): DataFrame =
     if (df.columns.contains("Contig")) df else df.withColumn("Contig", lit("0"))
 
-  /** Opt-in skew conf: a positive long under `key` routes the per-strain
-    * window at that site through the `Skew` two-phase plans (bit-identical
-    * output, hot strain scattered); unset = the plain window. Surface
-    * stability by default — a 770-strain corpus with no mega-genome pays
-    * nothing.
-    */
-  private def skewSpan(df: DataFrame, key: String): Option[Long] =
-    df.sparkSession.conf.getOption(key).map(_.toLong).filter(_ > 0)
-
   /** Genome-track query (lifecycle #1): per-strain ordered features with
     * z-scored GC/CAI, deviation flags and the W1-W3 rolling windows —
     * GIsInStrain.ipynb cells 3-8 as one plan: join -> position -> windows.
@@ -347,48 +326,21 @@ object Pangenome {
       .join(e.strains.withColumnRenamed("name", "strain_name"),
         col("Strain") === col("strain_name"))
       .join(nGenomes, col("Name") === col("feature_id"), "left")
-    // 100 TB posture: `graft.skew.trackChunkSpan` (a Start-coordinate
-    // span) swaps the per-Strain row_number for Skew.globalRowNumber
-    // (the distributed zipWithIndex) and the three rolling windows for
-    // ONE Skew.rowsRolling pass at the deepest reach (19), each narrower
-    // frame re-framed off the same carried spec. Bit-identical output
-    // (SkewLifecycleSpec: the frame SETS match and rows feed each frame
-    // in the same position order, so even the double-valued smooth_GC
-    // reproduces exactly); a mega-genome scatters instead of
-    // serializing. Unset = the plain two-window plan.
-    val skewSpanOpt = skewSpan(joined, "graft.skew.trackChunkSpan")
-    val positioned = skewSpanOpt match {
-      case Some(span) =>
-        graft.operators.Skew.globalRowNumber(joined, Seq("Strain"),
-          col("Start"), Seq(col("Name")), span, "__pos")
-          .withColumn("position", col("__pos").cast("int")).drop("__pos")
-      case None =>
-        joined.withColumn("position", row_number().over(
-          Window.partitionBy(col("Strain")).orderBy(col("Start"), col("Name"))))
-    }
+    val positioned = joined.withColumn("position", row_number().over(
+      Window.partitionBy(col("Strain")).orderBy(col("Start"), col("Name"))))
     val tracked = positioned
       .withColumn("z_GC", (col("GC") - col("avg_GC")) / col("stDev_GC"))
       .withColumn("z_CAI", (col("CAI") - col("avg_CAI")) / col("stDev_CAI"))
       .withColumn("deviating_GC", (abs(col("z_GC")) >= 1.5).cast("int"))
       .withColumn("deviating_CAI", (abs(col("z_CAI")) >= 1.5).cast("int"))
-    def trackAggs(wp: org.apache.spark.sql.expressions.WindowSpec) = Seq(
-      "smooth_GC" -> avg(col("z_GC")).over(wp.rowsBetween(-9, 0)),
-      "gi_flag" ->
+    val wp = Window.partitionBy(col("Strain"), col("Contig")).orderBy(col("position"))
+    val rolled = tracked
+      .withColumn("smooth_GC", avg(col("z_GC")).over(wp.rowsBetween(-9, 0)))
+      .withColumn("gi_flag",
         (sum(coalesce(col("deviating_GC"), lit(0))).over(wp.rowsBetween(-19, 0)) > 5)
-          .cast("int"),
-      "rare_flag" ->
+          .cast("int"))
+      .withColumn("rare_flag",
         (max(col("number_genomes")).over(wp.rowsBetween(-4, 0)) <= 600).cast("int"))
-    val rolled = skewSpanOpt match {
-      case Some(_) =>
-        // positions are dense per strain, so the rn-axis chunk span is
-        // just window * chunkFactor — no tuning knob needed
-        graft.operators.Skew.rowsRolling(tracked, Seq("Strain", "Contig"),
-          col("position"), Nil, window = 19, chunkSpan = 80L)(trackAggs)
-      case None =>
-        val wp = Window.partitionBy(col("Strain"), col("Contig"))
-          .orderBy(col("position"))
-        trackAggs(wp).foldLeft(tracked) { case (acc, (n, c)) => acc.withColumn(n, c) }
-    }
     rolled.select(col("Strain"), col("Contig"), col("position"), col("Name"),
       col("GC"), col("CAI"),
       col("z_GC"), col("z_CAI"), col("deviating_GC"), col("deviating_CAI"),

@@ -66,8 +66,7 @@ object StreamingJobs {
     * matched doc); batch-mode d8 does the full transitive closure.
     *
     * Band geometry defaults to [[graft.operators.Similarity.geometryFor]]
-    * at `minJaccard` (the verify floor IS the tuner's input; `graft.lsh.*`
-    * session confs override cluster-wide), so the
+    * at `minJaccard` (the verify floor IS the tuner's input), so the
     * default stream has ≥ 0.8 candidate recall at its own floor; pass
     * BOTH knobs to pin a geometry explicitly. The store only ever holds
     * ONE geometry — bands from different geometries never compare — so
@@ -391,7 +390,7 @@ object StreamingJobs {
       s"pass both numPerms and rowsPerBand or neither, got ($numPerms, $rowsPerBand)")
     val (p, r) =
       if (numPerms > 0) (numPerms, rowsPerBand)
-      else graft.operators.Similarity.geometryFor(docs.sparkSession, minJaccard)
+      else graft.operators.Similarity.geometryFor(minJaccard)
     require(p % r == 0, s"rowsPerBand must divide the $p-perm signature, got $r")
     docs.writeStream
       .option("checkpointLocation", checkpoint)

@@ -49,6 +49,10 @@ class CorpusRehearsalSpec extends AnyFunSuite with BeforeAndAfterAll {
       "hybrid_retrieve", "hybrid_retrieve_pruned", "hybrid_retrieve_ivf",
       "hybrid_auto_route", "hybrid_retrieve_auto",
       "ivfpq_retrieve"))
+    // every stage records the process CPU it took beside its wall time,
+    // and the CPU its Spark tasks took, which is a part of the former
+    assert(timings.forall(_._3 > 0), s"stage CPU seconds: $timings")
+    assert(timings.forall(t => t._4 >= 0 && t._4 <= t._3), s"executor CPU seconds: $timings")
     // pruning can only shrink the candidate-pair workload
     assert(m("n_bm25_cand_pairs_pruned") <= m("n_bm25_cand_pairs"))
     // the bloom gate NEVER misses an exactly-contaminated doc, and its

@@ -4,8 +4,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The entry points' shared pieces: `Harness.session` is the only session
-  * builder in the main sources and carries the shared posture, `Probe`
-  * parses its flags and reports timings plus plan counts, and Bench's
+  * builder in the main sources and carries the shared posture, the main
+  * sources read no tuning conf and a fixed set of environment variables,
+  * `Probe` parses its flags and reports timings plus plan counts, and Bench's
   * smoke-run guard keeps a non-sf0.1 run from writing the default
   * artifact.
   */
@@ -27,17 +28,22 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 
-  /** Names of the main-source files whose text matches `pattern`. */
-  private def mainSourcesMatching(pattern: scala.util.matching.Regex): Seq[String] = {
+  /** (file name, text) of every main-source file. */
+  private lazy val mainSources: Seq[(String, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    files(root).filter(_.getName.endsWith(".scala")).filter { f =>
+    files(root).filter(_.getName.endsWith(".scala")).map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      try pattern.findFirstIn(src.mkString).isDefined finally src.close()
-    }.map(_.getName).sorted
+      try f.getName -> src.mkString finally src.close()
+    }
   }
+
+  /** Names of the main-source files whose text matches `pattern`. */
+  private def mainSourcesMatching(pattern: scala.util.matching.Regex): Seq[String] =
+    mainSources.filter { case (_, text) => pattern.findFirstIn(text).isDefined }
+      .map(_._1).sorted
 
   test("SparkSession.builder appears in the main sources only in Harness.scala") {
     val builders = mainSourcesMatching("SparkSession\\.builder".r)
@@ -50,6 +56,19 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
         """long_sqdist\(s, cs\)""".r).foreach { p =>
       assert(mainSourcesMatching(p) == Seq("Ivf.scala"), s"copies of /$p/")
     }
+  }
+
+  test("the main sources read no tuning conf and only the kept SPARK_GRAFT_ variables") {
+    val tuning = """graft\.(skew|lsh|aqe)\.|graft\.scratch\.retain""".r
+    assert(mainSourcesMatching(tuning).isEmpty,
+      s"tuning confs in ${mainSourcesMatching(tuning)}")
+    // a new environment knob needs an edit here
+    val kept = Set("SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_QUIET_BASELINE", "SPARK_GRAFT_SCALING_QUERIES",
+      "SPARK_GRAFT_SCALING_REPS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_STREAM_BATCHES")
+    val read = mainSources.flatMap { case (_, text) =>
+      "SPARK_GRAFT_[A-Z_]+".r.findAllIn(text) }.toSet
+    assert(read == kept, s"added: ${read -- kept}, gone: ${kept -- read}")
   }
 
   test("Probe parses its flags and rejects unknown ones") {

@@ -55,39 +55,10 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Similarity.bandGeometryFor(0.3) == ((64, 2)))
     assert(Similarity.bandGeometryFor(0.2) == ((128, 2)))
     assert(Similarity.bandGeometryFor(0.05) == ((128, 2))) // ladder bottom: recall degrades, never r=1
-  }
-
-  test("graft.lsh.* confs steer geometry cluster-wide") {
-    def unsetAll(): Unit = Seq("graft.lsh.numPerms", "graft.lsh.rowsPerBand",
-      "graft.lsh.targetRecall").foreach(spark.conf.unset)
-    try {
-      // no conf: the ladder at the floor (same as bandGeometryFor)
-      assert(Similarity.geometryFor(spark, 0.7) == ((32, 4)))
-      // zero floor (diagnostic forceLsh): classic default, not ladder bottom
-      assert(Similarity.geometryFor(spark, 0.0) == ((32, 4)))
-      // a higher recall bar climbs the perms ladder at the same floor
-      spark.conf.set("graft.lsh.targetRecall", "0.999")
-      assert(Similarity.geometryFor(spark, 0.7) == ((32, 2)))
-      spark.conf.unset("graft.lsh.targetRecall")
-      // explicit geometry beats the ladder (and reaches rungs off it)
-      spark.conf.set("graft.lsh.numPerms", "64")
-      spark.conf.set("graft.lsh.rowsPerBand", "4")
-      assert(Similarity.geometryFor(spark, 0.7) == ((64, 4)))
-      assert(Similarity.geometryFor(spark, 0.0) == ((64, 4)))
-      // half-set override fails fast, as does a non-dividing geometry
-      spark.conf.unset("graft.lsh.rowsPerBand")
-      intercept[IllegalArgumentException](Similarity.geometryFor(spark, 0.7))
-      spark.conf.set("graft.lsh.rowsPerBand", "5")
-      intercept[IllegalArgumentException](Similarity.geometryFor(spark, 0.7))
-      // the conf-tuned geometry flows into the LSH pair path end-to-end:
-      // planted ~0.82-jaccard dups still surface under an override
-      spark.conf.set("graft.lsh.numPerms", "64")
-      spark.conf.set("graft.lsh.rowsPerBand", "4")
-      val lsh = Similarity.jaccardPairs(plantedSets, "id", "toks",
-          minSim = 0.6, forceLsh = true)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(lsh == (0 until 10).map(i => (s"doc$i", s"dup$i")).toSet)
-    } finally unsetAll()
+    // the entry points' geometry: the ladder at a positive floor, the
+    // classic 32/4 at a zero floor (diagnostic forceLsh), not ladder bottom
+    assert(Similarity.geometryFor(0.7) == Similarity.bandGeometryFor(0.7))
+    assert(Similarity.geometryFor(0.0) == ((32, 4)))
   }
 
   test("mid-floor LSH recall: floor-tuned banding recovers j≈0.54 pairs") {

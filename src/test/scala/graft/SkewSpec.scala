@@ -253,32 +253,7 @@ class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(negChunked == negPlain, "negative-ord value chunks must stay exact")
   }
 
-  test("chunkedLag: two-phase lag equals the plain per-key lag, incl. sparse keys and boundaries") {
-    import org.apache.spark.sql.expressions.WindowSpec
-    val df = skewed()
-    def aggs(w: WindowSpec): Seq[(String, org.apache.spark.sql.Column)] = Seq(
-      "prev1" -> lag(col("value"), 1).over(w),
-      "prev2" -> lag(col("value"), 2).over(w))
-    def canon(out: org.apache.spark.sql.DataFrame): Seq[String] =
-      out.select(col("key"), col("seq"), col("prev1"), col("prev2"))
-        .collect().map(_.toString).sorted.toSeq
-    val plainW = Window.partitionBy(col("key")).orderBy(col("seq"))
-    val plain = canon(aggs(plainW).foldLeft(df.toDF()) {
-      case (acc, (n, c)) => acc.withColumn(n, c)
-    })
-    // chunkSpan 400 again makes cold keys SPARSE per value chunk, so the
-    // previous row regularly lives several chunks back — the global-rn
-    // phase is what finds it; each key's first rows stay null exactly as
-    // the plain lag's partition boundary does
-    val chunked = Skew.chunkedLag(df, Seq("key"), col("seq"), Nil,
-      maxOffset = 2, chunkSpan = 400L)(aggs)
-    assert(canon(chunked) == plain,
-      "chunked lag must be row-for-row identical to the plain per-key lag")
-    val plan = chunked.queryExecution.executedPlan.toString
-    assert(plan.contains("__rchunk"), s"lag must window per (key, __rchunk):\n$plan")
-  }
-
-  test("seeded random corpora: rowsRolling and chunkedLag equal the plain plans across geometries") {
+  test("seeded random corpora: rowsRolling equals the plain rows window across geometries") {
     import org.apache.spark.sql.expressions.WindowSpec
     import spark.implicits._
     for (seed <- 0 until 6) {
@@ -314,17 +289,6 @@ class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
         window, chunkSpan, chunkFactor)(aggs), rollCols)
       assert(chunkedRoll == plainRoll,
         s"rowsRolling mismatch at seed=$seed window=$window span=$chunkSpan factor=$chunkFactor")
-      // lags at depth 1 and at the full carry depth
-      def lagAggs(w: WindowSpec): Seq[(String, org.apache.spark.sql.Column)] = Seq(
-        "p1" -> lag(col("value"), 1).over(w),
-        "pk" -> lag(col("value"), window).over(w))
-      val lagCols = Seq("key", "seq", "p1", "pk")
-      val plainLag = canon(lagAggs(Window.partitionBy(col("key")).orderBy(col("seq")))
-        .foldLeft(df.toDF()) { case (acc, (nm, c)) => acc.withColumn(nm, c) }, lagCols)
-      val chunkedLag = canon(Skew.chunkedLag(df, Seq("key"), col("seq"), Nil,
-        maxOffset = window, chunkSpan, chunkFactor)(lagAggs), lagCols)
-      assert(chunkedLag == plainLag,
-        s"chunkedLag mismatch at seed=$seed maxOffset=$window span=$chunkSpan factor=$chunkFactor")
     }
   }
 

@@ -38,18 +38,6 @@ class TuningSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("graft.test.tuning.marker")
   }
 
-  test("graft.aqe.minPartitionSize parameterizes the floor") {
-    spark.conf.set("graft.aqe.minPartitionSize", "2m")
-    try {
-      val scoped = operators.Tuning.computeDense(spark)
-      assert(scoped.conf.get(Key) == "2m")
-    } finally {
-      spark.conf.unset("graft.aqe.minPartitionSize")
-      // next access restores the default posture on the cached clone
-      assert(operators.Tuning.computeDense(spark).conf.get(Key) == "1b")
-    }
-  }
-
   test("computeDense plans execute with the same rows (d4 fixture)") {
     import org.apache.spark.sql.functions._
     // tiny self-join through the scoped session vs the parent session —

@@ -31,7 +31,8 @@ trace file.
 With --compare-output <call>, each run keeps its scratch directory
 (`run.py --keep`) until its pair is done. The call's stored parquet
 (`<round dir>/<call>`, as the lifecycle's analyses and every suite query
-store it) must then be row-identical, after sorting, in every round of both
+store it; `track` for genomeTrack, `rgps` for rgpMine) must then be
+row-identical, after sorting, in every round of both
 sides: DuckDB reads each one and the rows are compared with the parent's first
 round. The per-call `<call>.cpu_s` metrics come from the kept manifests, so
 no trace is needed, and the directories are deleted after the comparison.
@@ -86,6 +87,10 @@ def run_once(checkout, workload, seed, seconds, trace, keep=False):
     return result, failed, run_dir
 
 
+# lifecycle calls whose output directory is not named after the call
+OUT_DIRS = {"genomeTrack": "track", "rgpMine": "rgps"}
+
+
 def stored_rows(run_dir, call):
     """[(round, columns, sorted rows)] of the call's stored parquet, one per
     round of the run."""
@@ -96,7 +101,7 @@ def stored_rows(run_dir, call):
     con = duckdb.connect()
     try:
         for r in rounds:
-            path = os.path.join(r["dir"], call)
+            path = os.path.join(r["dir"], OUT_DIRS.get(call, call))
             rel = con.sql(f"SELECT * FROM read_parquet('{path}/*.parquet') ORDER BY ALL")
             out.append((r["round"], rel.columns, rel.fetchall()))
     finally:
